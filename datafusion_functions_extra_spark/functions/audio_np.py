@@ -40,7 +40,8 @@ def _synth_wav_bytes(d: int, scale: int) -> bytes:
     dividend's, so the twins only agree on non-negative ids (ADVICE r10
     item 5; suite doc_ids are non-negative by construction, and
     tests/test_r11_opts.py pins one negative-id divergence guard)."""
-    assert d >= 0, "synth twin requires non-negative doc id (sign of %)"
+    if d < 0:
+        raise ValueError("synth twin requires non-negative doc id (sign of %)")
     n = d % N_MOD + N_BASE
     rate = RATE_CHOICES[d % 3]
     data_bytes = 2 * n

@@ -480,32 +480,10 @@ def components_from_pairs(
     # one cheap aggregate over the just-materialized leaf — per round:
     # one checkpoint job + one leaf scan instead of checkpoint + shuffle
     # join + count.  Label values are untouched.
-    #
-    # AQE is switched OFF for the loop body (saved/restored around it,
-    # the streaming drain's conf pattern): with AQE on, every eager
-    # checkpoint materializes each of the round's 2-4 exchanges as its
-    # own job — spatial_dbscan measured 107 jobs for one query.  The
-    # loop relations are leaves whose sizes AQE already fixed when the
-    # edge/label leaves materialized, so per-round re-optimization buys
-    # nothing; without it the round's lazy checkpoints chain and the
-    # convergence count executes the WHOLE round as ONE job.  The loop's
-    # static shuffle-partition count is derived from the materialized
-    # edge leaf's own partitioning (itself AQE-coalesced from bytes) —
-    # scale-adaptive, not a constant: a 100 TB edge relation keeps its
-    # thousands of partitions, the bench-scale graph gets 1.
-    spark = edges.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(
-        edges.rdd.getNumPartitions(), labels.rdd.getNumPartitions()
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    from ..cache import loop_conf
+
+    with loop_conf(edges.sparkSession, edges, labels):
         labels = _components_loop(edges, labels, max_iters, compress)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # edges is a localCheckpoint: its blocks are released by the
     # ContextCleaner once the returned plan (whose LogicalRDD leaf pins
     # them) is garbage-collected — no unpersist handle to manage

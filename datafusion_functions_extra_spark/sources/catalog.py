@@ -54,8 +54,13 @@ _SCHEMA_CACHE: dict[tuple[str, int, int], object] = {}
 
 def cached_parquet_schema(spark: SparkSession, path: str):
     """Schema of the parquet file at ``path``, inferred once per file
-    identity per process (see ``_SCHEMA_CACHE``)."""
-    st = os.stat(path)
+    identity per process (see ``_SCHEMA_CACHE``).  A path ``os.stat``
+    cannot see (a URI such as ``file://``, ``hdfs://`` or ``s3://``) has
+    no identity to key on, so it falls back to plain inference."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path).schema
     key = (path, st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:

@@ -21,6 +21,7 @@ bounded by the watermark at any scale — the shuffle is keyed on
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -34,12 +35,6 @@ EVENTS_SCHEMA_TEMPLATE = (
     "value double, props string"
 )
 
-#: session-conf channel carrying the byte size of the stream's source
-#: file from the reader to :func:`run_available_now`, which derives the
-#: streaming shuffle-partition (= state-store instance) count from it.
-#: Read-and-cleared per drain so a stale value never leaks across queries.
-_STREAM_INPUT_BYTES_KEY = "spark.dfx.streaming.inputBytes"
-
 #: target input bytes per streaming state partition.  Stateful streaming
 #: fixed cost scales with (state stores x micro-batches): every
 #: partition pays store open/commit/maintenance per batch whether or not
@@ -47,38 +42,8 @@ _STREAM_INPUT_BYTES_KEY = "spark.dfx.streaming.inputBytes"
 #: stream-stream join cost ~0.5s PER PARTITION), so partitions must
 #: follow the data volume, not the core count — at 100 TB/day this
 #: divisor yields thousands of partitions (capped below), while a
-#: bounded local replay gets the handful it needs.  Overridable for
-#: cluster tuning without a code change.
-_STREAM_PART_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PART_BYTES", str(8 * 1024 * 1024))
-)
-
-#: session-conf flag set by builders whose STATE cardinality scales with
-#: sketch width x open windows rather than input bytes (CMS counters,
-#: HLL registers): a 2 MB replay file yields 1 bytes-derived partition,
-#: but ~300k (window, r, c) state keys in ONE store cost 7.4s of
-#: single-threaded restore/update/commit (measured, r11) vs 1.4s across
-#: 32 — while a pure-JVM windowed agg's per-partition fixed cost is only
-#: ~10 ms/partition, so flooring these plans at the session parallelism
-#: is cheap even on tiny streams.  Read-and-cleared per drain like the
-#: bytes key.
-_STREAM_STATE_HEAVY_KEY = "spark.dfx.streaming.stateHeavy"
-
-
-def declare_stream_input(spark: SparkSession, *paths: str) -> None:
-    """Record the total byte size of a streaming source for the next
-    :func:`run_available_now` drain (scale-adaptive state sizing).
-
-    ACCUMULATES into any not-yet-consumed declaration (r11, ADVICE r10
-    item 2): a query that reads two streams (e.g. a stream-stream join
-    draining after two reader calls) sizes its state from BOTH sources;
-    the drain still read-and-clears the slot."""
-    new_bytes = sum(os.path.getsize(p) for p in paths)
-    try:
-        new_bytes += int(spark.conf.get(_STREAM_INPUT_BYTES_KEY))
-    except Exception:  # noqa: BLE001 — no pending declaration
-        pass
-    spark.conf.set(_STREAM_INPUT_BYTES_KEY, str(new_bytes))
+#: bounded local replay gets the handful it needs.
+_STREAM_PART_BYTES = 8 * 1024 * 1024
 
 
 #: analyzed-plan node names whose per-GROUP compute runs in the Python
@@ -97,17 +62,15 @@ def _drain_partitions(
     *,
     python_stateful: bool = False,
     state_heavy: bool = False,
-    part_bytes: int | None = None,
 ) -> int:
     """Shuffle-partition (= state-store instance) count for one drain:
-    ``ceil(bytes / part_bytes)`` capped at 32x the parallelism, floored
-    at the parallelism for Python-stateful plans (per-group Python
-    compute needs the cores) and for declared state-heavy sketch
+    ``ceil(bytes / _STREAM_PART_BYTES)`` capped at 32x the parallelism,
+    floored at the parallelism for Python-stateful plans (per-group
+    Python compute needs the cores) and for state-heavy sketch
     aggregations (state keys scale with sketch width x open windows,
     not input bytes).  Pure so the derivation is unit-testable."""
-    pb = part_bytes or _STREAM_PART_BYTES
     cap = 32 * default_parallelism
-    parts = max(1, min(-(-stream_bytes // pb), cap))
+    parts = max(1, min(-(-stream_bytes // _STREAM_PART_BYTES), cap))
     if python_stateful or state_heavy:
         parts = max(parts, default_parallelism)
     return parts
@@ -126,6 +89,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
       land ~1.6% of timestamps one microsecond off);
     * timestamp[us] NTZ → declare timestamp_ntz, reinterpret the
       wall-clock in the UTC session tz (epoch values unchanged).
+
+    A caller that drains the stream passes the file's byte size to
+    :func:`run_available_now` as ``input_bytes``.
     """
     import os
 
@@ -142,7 +108,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema = EVENTS_SCHEMA_TEMPLATE.format(ts_type="timestamp_ntz")
     else:
         schema = EVENTS_SCHEMA_TEMPLATE.format(ts_type="timestamp")
-    declare_stream_input(spark, os.path.join(sf_dir, "events.parquet"))
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -765,6 +730,9 @@ def run_available_now(
     sdf: DataFrame,
     table_name: str | None = None,
     output_mode: str = "complete",
+    *,
+    input_bytes: int | None = None,
+    state_heavy: bool = False,
 ) -> DataFrame:
     """Drain all currently-available input through the streaming plan into
     an in-memory sink and return the result as a batch DataFrame.
@@ -773,58 +741,48 @@ def run_available_now(
     existing file then stops, so the call is deterministic and bounded.
     Stateful flatMap operators (``streaming_dedup``) require
     ``output_mode='append'``.
+
+    Sizing comes from the caller, which knows its source.
+    ``input_bytes`` (the streamed file's size) sets the shuffle-partition
+    (= state store) count by :func:`_drain_partitions`: stateful
+    streaming pays a fixed open/commit cost per store per micro-batch, so
+    the count follows the volume, floored at the parallelism for
+    per-group Python state.  ``state_heavy`` floors it at the parallelism
+    too, for sketch aggregations (``streaming_hll_users``,
+    ``streaming_cms_values``) whose state keys scale with sketch width,
+    not bytes (r11: ~300k keys in one store took 7.4s vs 1.4s across 32).
+    With neither, the session's partition count stands.  The conf is
+    restored and the checkpoint dir deleted when the drain ends; the
+    memory sink keeps its rows in the driver, so the returned table still
+    reads them.  Results are partitioning-invariant.
     """
     name = table_name or f"stream_out_{uuid.uuid4().hex[:8]}"
     spark = sdf.sparkSession
-    # Scale-adaptive state sizing (guide §2: derive partitioning from
-    # input size, not a constant): stateful streaming pays a fixed
-    # open/commit/maintenance cost PER state store PER micro-batch —
-    # measured ~0.5s/partition on a zero-row stream-stream-join finalize
-    # batch — so the shuffle-partition (= state instance) count must
-    # track the stream's volume.  The reader declares its source bytes;
-    # we size partitions at _STREAM_PART_BYTES each (capped at 32x the
-    # cluster parallelism), run the drain, and restore the session conf.
-    # Results are partitioning-invariant (keyed aggregations/joins), so
-    # only the fixed cost changes.
-    stream_bytes = None
-    try:
-        stream_bytes = int(spark.conf.get(_STREAM_INPUT_BYTES_KEY))
-    except Exception:  # noqa: BLE001 — key absent: leave conf untouched
-        pass
     prev_parts = None
-    if stream_bytes is not None:
-        spark.conf.unset(_STREAM_INPUT_BYTES_KEY)
+    if input_bytes is not None or state_heavy:
         # Python-stateful operators do real per-GROUP compute in the
         # Python worker — for those the state partition count must also
         # cover the cores, or one worker serializes every group
         # (measured 4x slower on the dedup op); pure JVM state (joins,
         # windowed aggs) is fixed-cost-dominated and wants the
-        # bytes-derived count alone, EXCEPT declared state-heavy sketch
-        # aggregations (see _STREAM_STATE_HEAVY_KEY).
+        # bytes-derived count alone.
         analyzed = sdf._jdf.queryExecution().analyzed().toString()
         py_stateful = any(n in analyzed for n in _PY_STATEFUL_NODES)
-        try:
-            state_heavy = spark.conf.get(_STREAM_STATE_HEAVY_KEY) == "true"
-        except Exception:  # noqa: BLE001 — flag absent: bytes rule stands
-            state_heavy = False
-        spark.conf.unset(_STREAM_STATE_HEAVY_KEY)
         parts = _drain_partitions(
-            stream_bytes,
+            input_bytes or 0,
             spark.sparkContext.defaultParallelism,
             python_stateful=py_stateful,
             state_heavy=state_heavy,
         )
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    ckpt = tempfile.mkdtemp(prefix="dfx-stream-ckpt-")
     try:
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="dfx-stream-ckpt-"),
-            )
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
@@ -832,6 +790,7 @@ def run_available_now(
     finally:
         if prev_parts is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -840,8 +799,9 @@ def run_available_now(
 # measured on the HLL drain, widen+1 state partition was CATASTROPHIC
 # (7.5s vs 2.0s without — random partial-agg states stop collapsing and
 # one reducer merges 32 partials per key) and neutral at 32 partitions
-# (1.84 vs 1.78s).  The state-heavy partition floor below is the whole
-# win; the hash parallelizes with the state partitions themselves.
+# (1.84 vs 1.78s).  The state-heavy partition floor
+# (``run_available_now(..., state_heavy=True)``) is the whole win; the
+# hash parallelizes with the state partitions themselves.
 
 
 def streaming_hll_users(
@@ -858,13 +818,15 @@ def streaming_hll_users(
     finished downstream (``hll_estimate``) once windows close; state per
     open window is <= 256 small ints per group — the sketch's whole
     point, on or off a stream.
+
+    Register state scales with sketch width, not input bytes, so drain
+    it with ``run_available_now(..., input_bytes=..., state_heavy=True)``.
     """
     from ..functions.text import bind_once
     from ..operators.sketches import HLL_M, HLL_P, _hll_rho
     from ..operators.similarity import hash60
 
     h = hash60(F.col("user_id").cast("string"))
-    events.sparkSession.conf.set(_STREAM_STATE_HEAVY_KEY, "true")
     keyed = (
         events.withWatermark("ts", watermark)
         .select(
@@ -905,6 +867,9 @@ def streaming_cms_values(
     carries natively.  Counters sketch the event value frequency
     distribution (``value_col`` cast to string, same keying as the batch
     ``cms_build``); state per open window is depth x width counters.
+
+    Counter state scales with sketch width, not input bytes, so drain
+    it with ``run_available_now(..., input_bytes=..., state_heavy=True)``.
     """
     from ..operators.similarity import MERSENNE_P, hash60
     from ..operators.sketches import CMS_DEPTH, _cms_col
@@ -916,7 +881,6 @@ def streaming_cms_values(
             for r in range(CMS_DEPTH)
         ]
     )
-    events.sparkSession.conf.set(_STREAM_STATE_HEAVY_KEY, "true")
     return (
         events.withWatermark("ts", watermark)
         .select("ts", h)

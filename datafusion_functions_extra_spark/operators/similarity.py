@@ -17,9 +17,11 @@ Four families (the classic training-data-pipeline quartet):
   random-hyperplane LSH bucketed ANN path that joins on bucket.
 
 Everything is JVM-side Column expressions (md5/conv/transform/aggregate)
-— no Python on executors.  Every constant below is the single source of
-truth shared with the DuckDB oracle generators at the bottom of this
-module, so both engines compute literally the same pipeline.
+except the connected-components contraction, one numpy pass per edge
+partition (:func:`components_from_pairs`).  Every constant below is the
+single source of truth shared with the DuckDB oracle generators at the
+bottom of this module, so both engines compute literally the same
+pipeline.
 
 Reference parity note: the reference crate has no similarity operators
 (it is six aggregate UDFs, see SURVEY.md); this module is part of the
@@ -397,19 +399,16 @@ def near_dup_components(
 ) -> DataFrame:
     """(id, component) — FULL connected components over the near-dup pair
     graph via iterative min-label propagation (each node repeatedly takes
-    the min label in its closed neighborhood; converges in graph-diameter
-    rounds, and near-dup components are shallow).
+    the min label in its closed neighborhood) after each edge partition
+    is contracted locally; see :func:`components_from_pairs`.
 
     This is the exact-clustering upgrade of :func:`near_dup_clusters`'s
     one-step keep rule.  Each round is one join + one aggregate — the
     standard scalable CC loop (GraphFrames does the same dance); the loop
     runs on the driver but every data operation is distributed, and
-    intermediate labels are persisted so re-EXECUTION stays flat.  The
-    LOGICAL plan, though, still grows per round (persist dedupes
-    execution, not the analyzed tree — §9.1), so every 5 rounds the
-    label relation is ``localCheckpoint``-ed, which truncates lineage to
-    the materialized blocks; at deeper graph diameters the analyzer cost
-    stays O(5 rounds), not O(total rounds).
+    every round's labels are ``localCheckpoint``-ed, which truncates
+    lineage to the materialized blocks, so the analyzed plan stays one
+    round deep at any graph diameter.
     """
     pairs = near_dup_pairs(df, text_col, id_col, threshold).select("id_a", "id_b")
     nodes = df.select(F.col(id_col).alias("id"))
@@ -429,30 +428,73 @@ def components_from_pairs(
 
     ``compress=True`` adds a pointer-doubling step per round
     (label <- label[label], one extra equi-join): plain neighbor-min
-    needs DIAMETER rounds, fine for the shallow near-dup cliques this
-    loop was built for, but a SPATIAL eps-graph forms long chains whose
-    diameter exceeds any fixed round budget — path compression makes
-    convergence O(log diameter), caught when spatial_dbscan at sf0.1
-    disagreed with the recursive-CTE oracle after 20 plain rounds.
+    needs as many rounds as the diameter of the graph the loop sees, and
+    a SPATIAL eps-graph forms long chains — spatial_dbscan at sf0.1
+    disagreed with the recursive-CTE oracle after 20 plain rounds on the
+    uncontracted graph.  Path compression makes convergence
+    O(log diameter) however the edges are partitioned.
 
     Fault tolerance: the per-round ``localCheckpoint`` leaves trade
     executor-loss recovery for speed (SURVEY §11.1) — the cluster
     variant is a reliable checkpoint or a per-round label stage table,
     the standard distributed-CC pattern."""
-    # localCheckpoint (not just persist): every iteration references the
-    # edge relation twice, and persist dedupes EXECUTION but still inlines
-    # the whole candidate-generation logical subtree (~6 shuffles) at each
-    # reference — the analyzed plan grew ~60 shuffle nodes per round.
-    # Checkpointing collapses edges to a LogicalRDD leaf, so each round
-    # adds only its own join+aggregate to the plan.  (r10 note: a
-    # repartition-by-join-key + persist layered on the checkpoint was
-    # tried and REVERTED — pinning the partition count defeats AQE's
-    # small-partition coalescing and turned every 1-task round stage
-    # into a 32-task one, a measured 2-4x regression at bench scale.)
-    edges = (
-        pairs.union(pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # Partial phase: contract each edge partition locally before the
+    # loop (the local-contraction step of Lacki et al. 2018).  Within a
+    # partition, numpy min-label propagation with pointer jumping finds
+    # every node's local component minimum m, and the partition emits the
+    # star edges (v, m) and (m, v) for each v != m.  Every input edge lies
+    # inside one local component, so the contracted graph has the same
+    # nodes and the same components (hence the same minimum ids) as the
+    # input; the symmetrised stars also replace the old union + distinct
+    # shuffle.  The loop's rounds grow with the diameter of the
+    # CONTRACTED graph (it only merges stars across partitions), not with
+    # the input's: a graph that fits one partition converges in round 0
+    # and is confirmed in round 1.
+    #
+    # ``contract`` is a closure that imports inside its body and reads no
+    # module global, so cloudpickle ships it by value: a module-level
+    # function is pickled by reference, and a Python worker that cannot
+    # import this package (any cwd but the repo root) would fail.
+    #
+    # The edges are checkpointed (not just persisted): every round
+    # references them twice, and persist dedupes EXECUTION but still
+    # inlines the whole candidate-generation logical subtree at each
+    # reference, so the analyzed plan grew ~60 shuffle nodes per round.
+    # The LogicalRDD leaf keeps each round's plan to its own
+    # join+aggregate.
+    def contract(batches):
+        import numpy as np
+        import pandas as pd
+
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = pd.concat(frames)
+        ids, idx = np.unique(
+            np.concatenate([pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy()]),
+            return_inverse=True,
+        )
+        a, b = np.split(idx, 2)
+        lab = np.arange(len(ids))
+        while True:
+            m = np.minimum(lab[a], lab[b])
+            new = lab.copy()
+            np.minimum.at(new, a, m)
+            np.minimum.at(new, b, m)
+            new = new[new]  # pointer jumping: labels are node indices
+            if np.array_equal(new, lab):
+                break
+            lab = new
+        v = np.flatnonzero(lab != np.arange(len(ids)))
+        yield pd.DataFrame(
+            {
+                "id_a": np.concatenate([ids[v], ids[lab[v]]]),
+                "id_b": np.concatenate([ids[lab[v]], ids[v]]),
+            }
+        )
+
+    edges = pairs.mapInPandas(contract, "id_a long, id_b long").localCheckpoint(
+        eager=True
     )
     # EVERY round's labels are eager-checkpointed (r10; compress mode
     # always did this — see the pointer-doubling note below).  The old
@@ -497,7 +539,9 @@ def _components_loop(
     (split out so the caller can scope the loop's session-conf window).
     Runs with AQE off and a data-derived static shuffle-partition count;
     each round is ONE job: the lazy localCheckpoints materialize inside
-    the convergence count's action."""
+    the convergence count's action.  ``edges`` is the locally contracted
+    graph, so the rounds grow with ITS diameter — the loop only merges
+    stars across edge partitions — not with the input graph's."""
     for it in range(max_iters):
         neighbor_min = (
             edges.join(labels, edges.id_b == labels.id)

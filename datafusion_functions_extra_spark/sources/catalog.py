@@ -10,6 +10,8 @@ Catalyst pushes filters/projections into the parquet reader (check
 from __future__ import annotations
 
 import os
+import stat
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -39,7 +41,7 @@ def sf_dir() -> str:
 
 
 #: per-process memo of parquet SCHEMAS keyed by file identity
-#: (path, mtime_ns, size) — metadata only, never row data.  Schema
+#: (see ``_file_identity``) — metadata only, never row data.  Schema
 #: inference on a bare ``spark.read.parquet(path)`` runs a real Spark
 #: job to fetch the footer (measured ~0.1s per call, r11), a fixed
 #: driver charge inside EVERY query's timed region; passing the schema
@@ -49,19 +51,31 @@ def sf_dir() -> str:
 #: overhead.  Keyed on file identity so a regenerated dataset at the
 #: same path re-infers; every query still computes its rows from the
 #: parquet (nothing but the StructType is memoized).
-_SCHEMA_CACHE: dict[tuple[str, int, int], object] = {}
+_SCHEMA_CACHE: dict[tuple, object] = {}
+
+
+def _file_identity(path: str) -> tuple:
+    """(path, mtime_ns, size) of a file; for a directory (a Spark-written
+    stage), the path and the sorted (name, mtime_ns, size) of its
+    entries — rewriting a part file in place need not touch the
+    directory's own mtime or size."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (path, st.st_mtime_ns, st.st_size)
+    with os.scandir(path) as it:
+        entries = [(e.name, e.stat()) for e in it]
+    return (path, tuple(sorted((n, s.st_mtime_ns, s.st_size) for n, s in entries)))
 
 
 def cached_parquet_schema(spark: SparkSession, path: str):
-    """Schema of the parquet file at ``path``, inferred once per file
-    identity per process (see ``_SCHEMA_CACHE``).  A path ``os.stat``
+    """Schema of the parquet file or directory at ``path``, inferred once
+    per identity per process (see ``_SCHEMA_CACHE``).  A path ``os.stat``
     cannot see (a URI such as ``file://``, ``hdfs://`` or ``s3://``) has
     no identity to key on, so it falls back to plain inference."""
     try:
-        st = os.stat(path)
+        key = _file_identity(path)
     except OSError:
         return spark.read.parquet(path).schema
-    key = (path, st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
@@ -170,13 +184,34 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
+def _session_defaults(
+    env: Mapping[str, str], n_cpus: int, phys_bytes: int
+) -> tuple[int, str]:
+    """(task slots, driver heap) of a local session on a host with
+    ``n_cpus`` usable cores and ``phys_bytes`` of RAM: every usable core,
+    and a quarter of RAM as heap, at least 1 GiB and at most 16 GiB.
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` in ``env`` override
+    either (deployment settings)."""
+    heap_mb = min(16 * 1024, max(1024, phys_bytes // 4 // 2**20))
+    return (
+        int(env.get("SPARK_GRAFT_CPUS", n_cpus)),
+        env.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m"),
+    )
+
+
 def get_spark(app_name: str = "datafusion-functions-extra-spark", cpus: int | None = None) -> SparkSession:
     """Session tuned for the local test harness; the same knobs (AQE,
     shuffle partitions sized to parallelism, UTC, Arrow) are what we'd set
-    cluster-side at 100 TB — only the numbers change.
+    cluster-side at 100 TB — only the numbers change.  Cores and heap
+    default to what this host has (:func:`_session_defaults`).
     """
+    default_cpus, driver_mem = _session_defaults(
+        os.environ,
+        len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+    )
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -188,13 +223,13 @@ def get_spark(app_name: str = "datafusion-functions-extra-spark", cpus: int | No
         # read as long and derive microsecond timestamps in load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local-mode driver == the whole cluster: all 32 task threads and
+        # local-mode driver == the whole cluster: every task thread and
         # every broadcast/codegen/listener allocation share this one heap.
         # 8g survives any single query but ages badly over a ~113-query
-        # bench session (old-gen fills -> full-GC storms add 10-15s to
-        # whichever heavy LSH query runs late); 16g keeps the suite at
-        # steady state on the 128 GiB harness box.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # bench session on 32 cores (old-gen fills -> full-GC storms add
+        # 10-15s to whichever heavy LSH query runs late); the 16g cap is
+        # what keeps that suite at steady state on a 128 GiB host.
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # keep stdout parseable: the console progress bar interleaves
         # with bench.py's one-line-JSON contract (and any tool that

@@ -149,30 +149,122 @@ def test_components_loop_restores_session_confs(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
 
 
-def test_components_loop_compress_matches_plain(spark):
+def test_components_loop_compress_matches_plain(spark, monkeypatch):
     """Pointer-doubling (compress) and plain min-label propagation must
     land on identical component labels — the r11 chg-column fusion has
-    to preserve convergence detection in both modes."""
+    to preserve convergence detection in both modes, and the
+    per-partition contraction must keep the components exact however the
+    edges and the shuffles are partitioned.  A 1-partition input is
+    contracted to stars in full, so the loop converges in round 0 and
+    confirms in round 1: at most 2 convergence counts."""
+    import random
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from datafusion_functions_extra_spark.operators.similarity import (
         components_from_pairs,
     )
 
-    # a 12-node path graph: worst case for plain propagation depth
-    nodes = spark.range(12).select(F.col("id"))
+    # a 40-node path graph over shuffled ids (worst case for plain
+    # propagation depth) plus two isolated nodes
+    order = random.Random(7).sample(range(40), 40)
+    nodes = spark.range(42).select(F.col("id"))
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(11)], "id_a long, id_b long"
+        list(zip(order, order[1:])), "id_a long, id_b long"
     )
-    plain = {
-        (r["id"], r["component"])
-        for r in components_from_pairs(nodes, pairs, max_iters=20).collect()
-    }
-    comp = {
-        (r["id"], r["component"])
-        for r in components_from_pairs(
-            nodes, pairs, max_iters=20, compress=True
-        ).collect()
-    }
-    assert plain == comp == {(i, 0) for i in range(12)}
+    want = {(i, 0) for i in range(40)} | {(40, 40), (41, 41)}
+
+    counts = []
+    count = DataFrame.count
+
+    def counting(self):
+        counts.append(self)
+        return count(self)
+
+    monkeypatch.setattr(DataFrame, "count", counting)
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for shuffle_parts in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_parts))
+            for n in (1, 3, 7):
+                for compress in (False, True):
+                    counts.clear()
+                    got = {
+                        (r["id"], r["component"])
+                        for r in components_from_pairs(
+                            nodes, pairs.repartition(n), max_iters=50,
+                            compress=compress,
+                        ).collect()
+                    }
+                    case = (shuffle_parts, n, compress)
+                    assert got == want, case
+                    if n == 1:
+                        assert len(counts) <= 2, case
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
+def test_components_contraction_runs_without_the_package(
+    spark, monkeypatch, tmp_path
+):
+    """The partition-local contraction components_from_pairs hands to
+    mapInPandas must ship BY VALUE.  A Python worker whose cwd and path
+    lack this repository (a benchmark run area, an installed wheel's
+    cluster) cannot import the package, and a module-level function —
+    which cloudpickle pickles by reference — fails there with
+    ModuleNotFoundError.  The captured function is unpickled and run in
+    such a process."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from datafusion_functions_extra_spark.operators.similarity import (
+        components_from_pairs,
+    )
+
+    funcs = []
+    map_in_pandas = DataFrame.mapInPandas
+
+    def capturing(self, func, schema, *args, **kwargs):
+        funcs.append(func)
+        return map_in_pandas(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", capturing)
+    components_from_pairs(
+        spark.range(2).select(F.col("id")),
+        spark.createDataFrame([(0, 1)], "id_a long, id_b long"),
+    )
+    (contract,) = funcs
+    (tmp_path / "contract.pkl").write_bytes(cloudpickle.dumps(contract))
+
+    code = """
+import importlib.util, pickle
+import pandas as pd
+assert importlib.util.find_spec("datafusion_functions_extra_spark") is None
+contract = pickle.load(open("contract.pkl", "rb"))
+batch = pd.DataFrame({"id_a": [3, 5, 9], "id_b": [4, 4, 8]})
+out = pd.concat(contract(iter([batch])))
+print(sorted(zip(out["id_a"].tolist(), out["id_b"].tolist())))
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert run.returncode == 0, run.stderr
+    # components {3, 4, 5} and {8, 9} as stars around their minimum ids
+    assert run.stdout.strip() == str(
+        [(3, 4), (3, 5), (4, 3), (5, 3), (8, 9), (9, 8)]
+    )
 
 
 def test_cached_parquet_schema_is_metadata_only(spark):
@@ -205,6 +297,52 @@ def test_cached_parquet_schema_infers_non_local_uri(spark):
     path = "/root/testdata/sf0.001/orders.parquet"
     uri = "file://" + path
     assert cached_parquet_schema(spark, uri) == spark.read.parquet(path).schema
+
+
+def test_cached_parquet_schema_sees_part_file_rewritten_in_place(
+    spark, tmp_path
+):
+    """A directory stage is keyed on its entries, not on the directory's
+    own stat: a part file rewritten in place with a different schema
+    leaves the directory's mtime and size alone, and must re-infer."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_functions_extra_spark.sources.catalog import (
+        cached_parquet_schema,
+    )
+
+    stage = tmp_path / "stage.parquet"
+    stage.mkdir()
+    part = stage / "part-00000.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    assert cached_parquet_schema(spark, str(stage)).fieldNames() == ["a"]
+    dir_mtime = os.stat(stage).st_mtime_ns
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), buf)
+    with open(part, "wb") as f:  # same directory entry, truncated in place
+        f.write(buf.getvalue().to_pybytes())
+    assert os.stat(stage).st_mtime_ns == dir_mtime
+    assert cached_parquet_schema(spark, str(stage)).fieldNames() == ["b", "c"]
+
+
+def test_session_defaults_follow_the_host():
+    """get_spark's defaults come from the host — every usable core, a
+    quarter of RAM as heap within [1, 16] GiB — and the env vars
+    override both."""
+    from datafusion_functions_extra_spark.sources.catalog import (
+        _session_defaults,
+    )
+
+    GiB = 2**30
+    assert _session_defaults({}, 4, 15 * GiB) == (4, "3840m")
+    assert _session_defaults({}, 32, 128 * GiB) == (32, "16384m")
+    assert _session_defaults({}, 1, 2 * GiB) == (1, "1024m")
+    env = {"SPARK_GRAFT_CPUS": "8", "SPARK_GRAFT_DRIVER_MEM": "6g"}
+    assert _session_defaults(env, 4, 15 * GiB) == (8, "6g")
 
 
 def test_drain_partitions_derivation():

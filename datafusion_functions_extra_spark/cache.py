@@ -1,50 +1,6 @@
-"""Tracked persist: a registry for intermediate DataFrames that a lazy
-query plan must cache (self-joined candidate graphs, iterated labels)
-but that the QUERY FUNCTION cannot unpersist itself — the caller only
-consumes the returned DataFrame, so an untracked ``persist()`` block
-would sit in executor storage memory for the life of the session.  A
-full suite/bench sweep calls :func:`release_all` after consuming each
-result, bounding cached storage to one query's working set.
-
-SINGLE-FLIGHT CONTRACT: the registry is one module-global list shared
-by every query in the process.  The bench harness and the driver both
-run queries strictly sequentially (build -> consume -> release_all), so
-at any instant the list holds exactly one query's handles.  Running two
-suite queries CONCURRENTLY in one session would let either caller's
-``release_all`` unpersist the other's still-needed blocks — results
-stay correct (unpersist only forces recomputation) but the cache's
-purpose is defeated.  Callers that need concurrency must scope their
-own registry (build the query, hold the returned handles, unpersist
-those) instead of the module-global convenience path.
-"""
+"""Session scoping for iterative driver loops."""
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-
-_PERSISTED: list[DataFrame] = []
-
-
-def persist_tracked(df: DataFrame) -> DataFrame:
-    """``df.persist()`` + enrol the handle for a later :func:`release_all`."""
-    out = df.persist()
-    _PERSISTED.append(out)
-    return out
-
-
-def release_all() -> int:
-    """Unpersist every tracked block; returns how many were released.
-    Safe to call at any time — releasing a cache never changes results,
-    only forces recomputation if the plan is re-executed."""
-    n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
 
 
 def loop_conf(spark, *leaves):

@@ -1,6 +1,5 @@
-"""Audio payload operators: WAV (RIFF PCM) encode, header parse, sample
-decode, and exact integer audio statistics — entirely JVM-side byte
-arithmetic (hex slicing + integer folds), no Python on executors.
+"""Closed-form audio waveform shared by the audio family's Spark path and
+its DuckDB oracles.
 
 The reference engine has no audio surface; this family covers the audio
 leg of a multimodal training-data pipeline: validate containers, read
@@ -10,23 +9,16 @@ filtering — the audio analog of the text quality score.
 
 Like the image family (multimodal.synth_payload / dhash64), payloads
 are SELF-ENCODED: a deterministic integer waveform per doc_id is packed
-into a byte-exact 44-byte-header PCM WAV in-query, then parsed and
-decoded BACK from the bytes.  The suite oracle recomputes the stats
-from the closed-form waveform — so a hash match certifies the whole
-encode -> header-parse -> sample-decode round trip against ground truth
-that never touches the bytes; pytest additionally pins the container
-against Python's stdlib `wave` reader (public-format conformance).
-
-Scale: everything is one projection over the scan — per-row arrays of
-n_samples <= 250 folded in-row.  Real corpora decode via the
-multimodal mapInPandas plumbing; these JVM paths are for the header/
-stats fast path that needs NO Python round trip at all.
+into a byte-exact 44-byte-header PCM WAV, then parsed and decoded BACK
+from the bytes.  That encode -> parse -> decode pipeline runs in
+Arrow-batched NumPy workers (:mod:`.audio_np`).  This module holds only
+the waveform definition: the parameters below, which both sides import,
+and :func:`sample_expr`, the SQL text the suite oracles use to recompute
+every statistic from the closed form without touching bytes — so a hash
+match certifies the whole byte round trip against ground truth.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 #: waveform parameters — shared literal text with the suite oracle
 N_BASE, N_MOD = 50, 200  #: n_samples = doc_id % 200 + 50
@@ -37,130 +29,3 @@ def sample_expr(d: str, k: str) -> str:
     """Closed-form int16 sample value (SQL text, valid in Spark AND
     DuckDB): a deterministic modular sawtooth, range [-16384, 16376]."""
     return f"((({d} % 13 + 3) * {k} * 97 + {d} * 31) % 4096 - 2048) * 8"
-
-
-def _le_hex(col: Column, n_bytes: int) -> Column:
-    """Little-endian hex string of a non-negative integer column.
-
-    Guarded against field overflow: a value that needs more than
-    ``n_bytes`` bytes would otherwise have its most-significant hex
-    digits silently dropped by the ``lpad`` (producing a malformed RIFF
-    header).  All current callers are bounded far below their field
-    widths (n_samples <= 249 -> data_bytes <= 498 in 4 bytes; rate <=
-    16000 -> byte rate 32000 in 4 bytes), so the guard NULLs the output
-    only on corrupt inputs — failing loudly (NULL payload) instead of
-    emitting a plausible-looking broken container."""
-    v = col.cast("long")
-    in_range = v >= 0
-    if n_bytes < 8:  # 256**8 exceeds the long domain; longs always fit
-        in_range = in_range & (v < F.lit(256 ** n_bytes).cast("long"))
-    be = F.when(in_range, F.lpad(F.hex(v), 2 * n_bytes, "0"))
-    return F.concat(
-        *[
-            F.substring(be, 2 * n_bytes - 2 * i - 1, 2)
-            for i in range(n_bytes)
-        ]
-    )
-
-
-def synth_wav(doc_id: Column, scale: int = 8) -> Column:
-    """Byte-exact mono 16-bit PCM WAV: 44-byte RIFF/fmt/data header with
-    real little-endian size/rate fields + the closed-form samples, all
-    assembled as one hex string and unhex'd once.
-
-    ``scale`` is the amplitude multiplier applied to the sawtooth (the
-    default 8 gives range [-16384, 16376]); a different scale yields the
-    SAME waveform re-mastered at a different volume — byte-different
-    payloads with identical sign structure, the audio near-dup test
-    case."""
-    d = doc_id.cast("long")
-    n = (d % N_MOD + N_BASE).cast("long")
-    rate = (
-        F.when(d % 3 == 0, RATE_CHOICES[0])
-        .when(d % 3 == 1, RATE_CHOICES[1])
-        .otherwise(RATE_CHOICES[2])
-        .cast("long")
-    )
-    data_bytes = 2 * n
-    header = F.concat(
-        F.lit("52494646"),  # 'RIFF'
-        _le_hex(data_bytes + 36, 4),
-        F.lit("57415645"),  # 'WAVE'
-        F.lit("666D7420"),  # 'fmt '
-        _le_hex(F.lit(16), 4),  # fmt chunk size
-        _le_hex(F.lit(1), 2),  # PCM
-        _le_hex(F.lit(1), 2),  # mono
-        _le_hex(rate, 4),
-        _le_hex(rate * 2, 4),  # byte rate
-        _le_hex(F.lit(2), 2),  # block align
-        _le_hex(F.lit(16), 2),  # bits/sample
-        F.lit("64617461"),  # 'data'
-        _le_hex(data_bytes, 4),
-    )
-    # per-sample LE int16: hex of the two's complement & 0xFFFF, bytes
-    # swapped; array_join folds the per-sample hex into one string
-    samples_hex = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), (n - 1).cast("int")),
-            lambda k: _int16_le_hex(_sample_col(d, k, scale)),
-        ),
-        "",
-    )
-    return F.unhex(F.concat(header, samples_hex))
-
-
-def _sample_col(d: Column, k: Column, scale: int = 8) -> Column:
-    """Column twin of :func:`sample_expr` — keep the two in lockstep."""
-    return (((d % 13 + 3) * k * 97 + d * 31) % 4096 - 2048) * scale
-
-
-def _int16_le_hex(s: Column) -> Column:
-    v = s.cast("long").bitwiseAND(F.lit(65535))
-    be = F.lpad(F.hex(v), 4, "0")
-    return F.concat(F.substring(be, 3, 2), F.substring(be, 1, 2))
-
-
-def _le_uint(payload_hex: Column, byte_offset: int, n_bytes: int) -> Column:
-    """Little-endian unsigned int read from a hex-encoded payload
-    (byte_offset is 0-based)."""
-    be = F.concat(
-        *[
-            F.substring(
-                payload_hex, 2 * (byte_offset + n_bytes - 1 - i) + 1, 2
-            )
-            for i in range(n_bytes)
-        ]
-    )
-    return F.conv(be, 16, 10).cast("long")
-
-
-def wav_meta(payload_hex: Column) -> dict[str, Column]:
-    """Standard 44-byte WAV header fields parsed from the bytes."""
-    return {
-        "n_channels": _le_uint(payload_hex, 22, 2),
-        "sample_rate": _le_uint(payload_hex, 24, 4),
-        "bits_per_sample": _le_uint(payload_hex, 34, 2),
-        "data_bytes": _le_uint(payload_hex, 40, 4),
-    }
-
-
-def wav_samples(payload_hex: Column, n_samples: Column) -> Column:
-    """Decode the PCM body back to an int array (two's complement LE
-    int16 at byte 44 + 2k).
-
-    ONE regex split into 4-hex-char chunks (the Java ``\\G`` anchored
-    lookbehind) instead of two dynamic substrings per sample — measured
-    ~7x cheaper on the decode leg at sf0.1 (dynamic-offset substring
-    re-scans the string per sample; the split is one linear pass)."""
-    body = F.substring(payload_hex, F.lit(89), (n_samples * 4).cast("int"))
-    chunks = F.filter(
-        F.split(body, "(?<=\\G....)"), lambda c: F.length(c) == 4
-    )
-
-    def one(c: Column) -> Column:
-        raw = F.conv(
-            F.concat(F.substring(c, 3, 2), F.substring(c, 1, 2)), 16, 10
-        ).cast("long")
-        return F.when(raw >= 32768, raw - 65536).otherwise(raw)
-
-    return F.transform(chunks, one)

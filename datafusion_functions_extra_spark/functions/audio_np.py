@@ -1,22 +1,19 @@
 """Arrow-batched WAV encode -> parse -> decode pipelines (guide §4.2).
 
-The JVM audio paths in :mod:`.audio` assemble and re-slice per-sample hex
-STRINGS inside interpreted higher-order expressions — row-local and
-shuffle-free, but the per-row constant is large (a ~250-sample clip costs
-hundreds of substring/conv calls).  These replacements run the SAME
-pipeline — closed-form integer waveform -> byte-exact RIFF/PCM WAV ->
-header parse -> int16 decode -> integer stats — over Arrow batches with
+Each runner builds the closed-form integer waveform of :mod:`.audio` into
+a byte-exact RIFF/PCM WAV, parses the header and decodes the int16 body
+BACK from the bytes, and folds integer stats — over Arrow batches with
 NumPy byte arithmetic, so a task processes its whole partition with a
-handful of vectorized passes instead of per-sample string expressions.
+handful of vectorized passes.
 
 Bit-exactness is by construction: every quantity here is INTEGER
 (samples, header fields, energies, run lengths, DFT twiddle sums bounded
-far below 2**63) or an md5 over an exactly-specified byte string, so no
-floating-point op exists to drift.  The md5 input replicates the JVM
-expression byte-for-byte (``md5(concat(cast(n AS string), ':', signs))``).
-The closed-form waveform constants are imported from :mod:`.audio` so the
-two implementations cannot fall out of lockstep; pytest pins this decode
-against the JVM path row-for-row.
+far below 2**63) or an md5 over an exactly-specified byte string
+(``md5(concat(cast(n AS string), ':', signs))``), so no floating-point op
+exists to drift.  The waveform constants are imported from :mod:`.audio`,
+whose :func:`.audio.sample_expr` the DuckDB oracles replay without
+touching bytes; pytest pins every runner against those oracles and the
+container against Python's stdlib ``wave`` reader.
 """
 
 from __future__ import annotations
@@ -33,15 +30,21 @@ from .audio import N_BASE, N_MOD, RATE_CHOICES
 
 
 def _synth_wav_bytes(d: int, scale: int) -> bytes:
-    """Byte-identical twin of :func:`.audio.synth_wav` (pytest-pinned).
+    """Byte-exact mono 16-bit PCM WAV for doc ``d``: 44-byte
+    RIFF/fmt/data header with little-endian size/rate fields, then the
+    closed-form samples.  ``scale`` is the amplitude multiplier (8 gives
+    :func:`.audio.sample_expr`'s range); another scale is the SAME
+    recording re-mastered at another volume — byte-different payloads
+    with identical sign structure.
 
     PRECONDITION: ``d`` (the doc id) must be non-negative — Python's
-    ``%`` follows the divisor's sign while Spark's remainder follows the
-    dividend's, so the twins only agree on non-negative ids (ADVICE r10
-    item 5; suite doc_ids are non-negative by construction, and
-    tests/test_r11_opts.py pins one negative-id divergence guard)."""
+    ``%`` follows the divisor's sign while the SQL remainder of
+    :func:`.audio.sample_expr` follows the dividend's, so the two only
+    agree on non-negative ids (ADVICE r10 item 5; suite doc_ids are
+    non-negative by construction, and tests/test_r11_opts.py pins the
+    guard)."""
     if d < 0:
-        raise ValueError("synth twin requires non-negative doc id (sign of %)")
+        raise ValueError("WAV synth requires non-negative doc id (sign of %)")
     n = d % N_MOD + N_BASE
     rate = RATE_CHOICES[d % 3]
     data_bytes = 2 * n
@@ -94,8 +97,8 @@ def wav_fingerprints(
     df: DataFrame, id_col: str, scale: int = 8
 ) -> DataFrame:
     """(id, n_samples, fp) — md5 over the length-prefixed sign sequence
-    of the decoded samples, byte-identical to the JVM expression
-    ``md5(concat(cast(n AS string), ':', signs))``."""
+    of the decoded samples, ``md5(concat(cast(n AS string), ':', signs))``
+    with ``signs`` one '1'/'0' per sample."""
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

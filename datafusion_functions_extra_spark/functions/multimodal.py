@@ -565,129 +565,12 @@ CDC_WINDOW = 8
 CDC_MOD = 64
 
 
-def cdc_chunks(
-    df: DataFrame,
-    payload_col: str,
-    id_col: str,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Content-defined chunking over a binary column: split each payload
-    at content-determined boundaries (rolling window fingerprint ≡ 0 mod
-    ``CDC_MOD``), returning one row per chunk ``(id, *keep_cols,
-    chunk_hash, chunk_bytes)`` — ``keep_cols`` ride along so a consumer
-    grouping chunks by a payload attribute (mime, source) never has to
-    join back to the payload relation.
-
-    The storage-dedup classic (Muthitacharoen et al. 2001, LBFS): unlike
-    fixed-size blocks, an insertion near the start of a payload shifts
-    only the chunks it touches — identical trailing content still lands
-    in identical chunks, so cross-document chunk dedup finds shared
-    binary content (common headers, repeated segments) that offset-based
-    blocking misses.
-
-    Engine-portable fingerprint: the boundary test mixes three byte taps
-    of the trailing ``CDC_WINDOW`` bytes (positions i, i−3, i−7) with
-    fixed odd multipliers — integer-only per-position work (a gear-hash
-    stand-in DuckDB replays bit-exactly; a production Spark deployment
-    would swap in a full gear/rabin rolling-hash UDF with the same
-    boundary semantics).  The boundary still depends only on content at
-    fixed relative offsets, so the CDC shift-resistance property holds.
-    Whole pipeline is in-row expression work (byte array -> boundary
-    filter -> chunk transform) followed by one explode — chunk identity
-    never shuffles raw payloads, only (id, chunk_hash, chunk_bytes)
-    rows.
-
-    The final byte is always a boundary, so chunks tile the payload
-    exactly; payloads shorter than the window form one whole-payload
-    chunk (the ``_shingles_or_whole`` convention applied to bytes)."""
-    hexs = F.hex(F.col(payload_col))
-    n = (F.length(hexs) / 2).cast("int")
-
-    def byte_arr(h: Column, L: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(1), L),
-            lambda i: F.conv(F.substring(h, i * 2 - 1, 2), 16, 10).cast("int"),
-        )
-
-    def bounds(bts: Column, L: Column) -> Column:
-        # Guard L < CDC_WINDOW: F.sequence(8, L) would DESCEND for L<8
-        # (DuckDB's generate_series(8, L) is empty), making the lambda
-        # tap element_at(bts, i-7) at index 0 (runtime error) or a
-        # negative index (counts from the array END — silent
-        # mis-chunking).  Short payloads get an empty boundary list so
-        # the final-byte fallback below emits the documented
-        # whole-payload chunk, matching the oracle bit-for-bit.
-        rule = F.when(
-            L >= CDC_WINDOW,
-            F.filter(
-                F.sequence(F.lit(CDC_WINDOW), L),
-                lambda i: (
-                    F.element_at(bts, i) * 131
-                    + F.element_at(bts, i - 3) * 31
-                    + F.element_at(bts, i - 7) * 7
-                )
-                % CDC_MOD
-                == 0,
-            ),
-        ).otherwise(F.array().cast("array<int>"))
-        return F.when(
-            F.array_position(rule, L) > 0, rule
-        ).otherwise(F.concat(rule, F.array(L)))
-
-    def chunks(h: Column, b: Column) -> Column:
-        # chunk j spans bytes (b[j-1]+1 .. b[j]); the CASE guards j=1
-        # (element_at rejects index 0 outright, unlike DuckDB's NULL)
-        def prev(j: Column) -> Column:
-            return F.when(j == 1, F.lit(0)).otherwise(F.element_at(b, j - 1))
-
-        return F.transform(
-            F.sequence(F.lit(1), F.size(b)),
-            lambda j: F.struct(
-                F.md5(
-                    F.substring(
-                        h,
-                        prev(j) * 2 + 1,
-                        (F.element_at(b, j) - prev(j)) * 2,
-                    ).cast("binary")
-                ).alias("chunk_hash"),
-                (F.element_at(b, j) - prev(j)).cast("long").alias("chunk_bytes"),
-            ),
-        )
-
-    from .text import bind_once  # noqa: PLC0415
-
-    chunked = df.select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in keep_cols],
-        F.explode(
-            # three-deep bind: hex string, byte array, boundary list each
-            # materialize exactly once per row — element_at over an
-            # UNBOUND transform would re-evaluate the whole byte array
-            # per tap (O(L²) per payload, measured as a >100x blowup)
-            bind_once(
-                hexs,
-                lambda h: bind_once(
-                    byte_arr(h, n),
-                    lambda bts: bind_once(
-                        bounds(bts, n), lambda b: chunks(h, b)
-                    ),
-                ),
-            )
-        ).alias("c"),
-    )
-    return chunked.select(
-        "id",
-        *keep_cols,
-        F.col("c.chunk_hash").alias("chunk_hash"),
-        F.col("c.chunk_bytes").alias("chunk_bytes"),
-    )
-
-
 def cdc_chunks_sql(payload_expr: str = "payload", id_expr: str = "doc_id") -> str:
     """DuckDB fragment producing the identical ``(id, chunk_hash,
-    chunk_bytes)`` rows from a relation exposing ``{payload_expr}`` —
-    the oracle mirror of :func:`cdc_chunks` (same hex windows, same
-    hash60 boundary rule, same whole-payload fallback)."""
+    chunk_bytes)`` rows from a relation ``p`` exposing ``{payload_expr}``
+    — the independent oracle of :func:`cdc_chunks_np`, written as list
+    expressions over the hex string (same boundary taps, same md5 over
+    the UPPERCASE-hex chunk, same whole-payload fallback)."""
     w, m = CDC_WINDOW, CDC_MOD
     tap = "(bt[i] * 131 + bt[i - 3] * 31 + bt[i - 7] * 7)"
     return f"""
@@ -728,14 +611,30 @@ def cdc_chunks_np(
     id_col: str,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Arrow-batched twin of :func:`cdc_chunks` (guide §4.2): the same
-    boundary rule, hex windows and chunk md5s, computed per batch with
-    NumPy byte taps instead of per-byte interpreted ``conv(substring)``
-    expressions.  Everything is integer arithmetic on byte values plus
-    md5 over the exact UPPERCASE-hex chunk substring, so the rows are
-    bit-identical (pytest pins this against the JVM chunker; the DuckDB
-    oracle fragment is shared).  ``keep_cols`` pass through the Python
-    node untouched, so consumers still never join back to payloads."""
+    """Content-defined chunking over a binary column: split each payload
+    at content-determined boundaries, returning one row per chunk ``(id,
+    *keep_cols, chunk_hash, chunk_bytes)`` — ``keep_cols`` pass through
+    the Python node untouched, so a consumer grouping chunks by a payload
+    attribute (mime, source) never has to join back to the payloads.
+
+    The storage-dedup classic (Muthitacharoen et al. 2001, LBFS): unlike
+    fixed-size blocks, an insertion near the start of a payload shifts
+    only the chunks it touches — identical trailing content still lands
+    in identical chunks, so cross-document chunk dedup finds shared
+    binary content that offset-based blocking misses.
+
+    Boundary rule: 1-based byte position ``i >= CDC_WINDOW`` ends a chunk
+    when three byte taps of the trailing window (``i``, ``i-3``, ``i-7``)
+    mixed with fixed odd multipliers are ≡ 0 (mod ``CDC_MOD``) — an
+    integer-only gear-hash stand-in that DuckDB replays bit-exactly
+    (:func:`cdc_chunks_sql`).  The final byte is always a boundary, so
+    chunks tile the payload exactly; payloads shorter than the window
+    form one whole-payload chunk, and a NULL payload yields no rows.
+
+    Runs per Arrow batch (guide §4.2) with NumPy byte taps; everything
+    is integer arithmetic on byte values plus md5 over the exact
+    UPPERCASE-hex chunk substring, so the rows are bit-identical to the
+    DuckDB fragment (pytest pins this)."""
     import hashlib  # noqa: PLC0415
 
     import numpy as np  # noqa: PLC0415
@@ -746,8 +645,8 @@ def cdc_chunks_np(
             ids, keeps, hashes, sizes = [], [[] for _ in keep_cols], [], []
             for row_i, payload in enumerate(pdf[payload_col]):
                 if payload is None:
-                    # replicate the JVM path's explode-of-NULL row drop
-                    # (hex(NULL) -> no rows); ADVICE r10 item 1
+                    # NULL payload: no rows, as hex(NULL) gives the
+                    # oracle no chunks (ADVICE r10 item 1)
                     continue
                 b = bytes(payload)
                 n = len(b)

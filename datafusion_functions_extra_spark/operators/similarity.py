@@ -2408,98 +2408,6 @@ FROM m
 # ---------------------------------------------------------------------------
 
 
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold_pct: int = 60,
-) -> DataFrame:
-    """EXACT Jaccard similarity self-join over distinct 3-word SHINGLE
-    sets via prefix filtering (the AllPairs/PPJoin family, Bayardo et
-    al. WWW'07) — the deterministic sibling of the MinHash-LSH candidate
-    pipeline: no hashing, no probability of a missed pair, and the same
-    shingle universe the MinHash signatures estimate (distinct token
-    sets are uselessly dense on templated corpora — measured 7M
-    qualifying pairs at sf0.1 — while shingle sets are discriminative).
-
-    Shingles get a global rarity rank (ascending document frequency; the
-    two-phase ``functions.distribution.global_rank``, no single-partition
-    window); each doc's prefix is its ``sz - ceil(theta*sz) + 1``
-    rarest shingles.  The prefix-filter lemma guarantees any pair with
-    J >= theta shares a token within BOTH prefixes (with a consistent
-    total order, if |A∩B| >= alpha then prefixes of length
-    |x| - alpha + 1 intersect; here alpha = ceil(theta*max(|A|,|B|)) >=
-    each per-set bound), so the equi-join on prefix tokens — rare tokens,
-    hence few collisions — produces a candidate superset, and the exact
-    intersection count then keeps ``100*inter >= pct*(union)``: an
-    INTEGER threshold test, no float boundary to disagree on.
-
-    Scale shape: the only corpus-sized shuffles are the (id, token)
-    explode and its frequency/prefix joins; the quadratic risk lives
-    only in prefix-token collisions, which the rare-first ordering
-    minimizes (the classic result: cost tracks the true result size on
-    non-pathological corpora).  Returns (id_a, id_b, n_inter, jacc
-    rounded 6 dp) with id_a < id_b.
-    """
-    from ..functions.distribution import global_rank
-    from pyspark.sql import Window
-
-    pct = int(threshold_pct)
-    from ..functions.text import shingles_or_whole
-
-    tok = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles_or_whole(text_col))).alias("token"),
-    )
-    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df_t"))
-    ranked = global_rank(
-        freq, [F.col("df_t").asc(), F.col("token").asc()], "trank"
-    ).select("token", "trank")
-    sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    wd = Window.partitionBy("id").orderBy(F.col("trank").asc())
-    prefix = (
-        tok.join(ranked, "token")
-        .withColumn("pos", F.row_number().over(wd))
-        .join(sizes, "id")
-        .where(
-            F.col("pos")
-            <= F.col("sz")
-            - F.floor((F.lit(pct) * F.col("sz") + 99) / 100)
-            + 1
-        )
-        .select("id", "token")
-    )
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "token")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    ta = tok.select(F.col("id").alias("id_a"), "token")
-    tb = tok.select(F.col("id").alias("id_b"), "token")
-    inter = (
-        cand.join(ta, "id_a")
-        .join(tb, ["id_b", "token"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    union_sz = F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .where(F.lit(100) * F.col("n_inter") >= F.lit(pct) * union_sz)
-        .select(
-            "id_a",
-            "id_b",
-            "n_inter",
-            r6n(F.col("n_inter").cast("double") / union_sz).alias("jacc"),
-        )
-    )
-
-
 def prefix_filter_jaccard_oracle_sql(threshold_pct: int = 60) -> str:
     """Ground-truth oracle: ALL-PAIRS exact Jaccard at the same integer
     threshold — so the driver hash also certifies the prefix filter's
@@ -2559,26 +2467,24 @@ def near_dup_pagerank(
 
     Scale shape: each round is ONE edge-keyed join + ONE aggregate
     (the standard distributed PR step); the edge relation is computed
-    once and persisted via the tracked-cache registry; iterations are a
+    once and persisted; iterations are a
     FIXED small unroll (3), so the logical plan grows linearly and needs
     no checkpoint truncation (the label-propagation loop's localCheckpoint
     handles the unbounded-iteration case).
     """
-    from ..cache import persist_tracked
-
     pairs = near_dup_pairs(df, text_col, id_col, threshold).select("id_a", "id_b")
     # eager checkpoint truncates the LSH subtree: a lazy persist inlines
     # it at every one of the ~7 per-round references in the analyzed
     # plan (measured: the truncation alone is a ~1.6x win; per-round
     # exchanges of the tiny coalesced edge relation are cheap, so no
     # fixed-count repartition is layered on top — see components note)
-    edges = persist_tracked(
+    edges = (
         pairs.union(
             pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
         )
         .distinct()
         .localCheckpoint(eager=True)
-    )
+    ).persist()
     deg = edges.groupBy("id_a").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("id_a").alias("id"), "deg")
     n = nodes.agg(F.count(F.lit(1)).alias("n"))
@@ -3190,13 +3096,25 @@ def ppjoin_jaccard_pairs(
     id_col: str,
     threshold_pct: int = 60,
 ) -> DataFrame:
-    """PPJoin: the POSITION-enhanced prefix-filter exact-Jaccard
-    self-join (Xiao, Wang, Lin & Yu, WWW'08) — same result set as
-    :func:`prefix_filter_jaccard_pairs` (the positional filter never
-    prunes a true pair), strictly fewer candidates reaching the
-    verification join.
+    """EXACT Jaccard similarity self-join over distinct 3-word SHINGLE
+    sets: PPJoin, the POSITION-enhanced prefix filter (Xiao, Wang, Lin &
+    Yu, WWW'08) over AllPairs (Bayardo et al. WWW'07) — the
+    deterministic sibling of the MinHash-LSH candidate pipeline: no
+    hashing, no probability of a missed pair, and the same shingle
+    universe the MinHash signatures estimate (distinct token sets are
+    uselessly dense on templated corpora — measured 7M qualifying pairs
+    at sf0.1 — while shingle sets are discriminative).
 
-    Two extra prunes over AllPairs, both exact integer tests:
+    Shingles get a global rarity rank (ascending document frequency; the
+    two-phase ``functions.distribution.global_rank``, no single-partition
+    window); each doc's prefix is its ``sz - ceil(theta*sz) + 1``
+    rarest shingles.  The prefix-filter lemma guarantees any pair with
+    J >= theta shares a token within BOTH prefixes (with a consistent
+    total order, if |A∩B| >= alpha then prefixes of length
+    |x| - alpha + 1 intersect; here alpha = ceil(theta*max(|A|,|B|)) >=
+    each per-set bound), so the equi-join on prefix tokens — rare tokens,
+    hence few collisions — produces a candidate superset.  Two exact
+    integer prunes then drop candidates no true pair can come from:
 
     * **length filter** on the prefix join: a qualifying pair needs
       ``100*min(sz) >= pct*max(sz)``.
@@ -3206,11 +3124,14 @@ def ppjoin_jaccard_pairs(
       ``alpha = ceil(pct*(sz_a+sz_b)/(100+pct))``, so occurrences with
       a smaller upper bound are dropped BEFORE the distinct/verify.
 
-    Scale shape identical to the AllPairs sibling (rare-first two-phase
-    global token ranks, equi-join on prefix tokens, candidates-only
-    verification); the positional prune cuts the candidate set the
-    verify join must hash — the knob that matters when templated
-    corpora make prefix tokens collide."""
+    The exact intersection count then keeps ``100*inter >= pct*(union)``:
+    an INTEGER threshold test, no float boundary to disagree on.
+
+    Scale shape: the only corpus-sized shuffles are the (id, token)
+    explode and its frequency/prefix joins; the quadratic risk lives
+    only in prefix-token collisions, which the rare-first ordering and
+    the positional prune minimize.  Returns (id_a, id_b, n_inter, jacc
+    rounded 6 dp) with id_a < id_b."""
     from ..functions.distribution import global_rank
     from ..functions.text import shingles_or_whole
     from pyspark.sql import Window

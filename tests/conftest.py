@@ -42,3 +42,31 @@ def test_table(spark):
         "utf8_col string, int64_col bigint, float64_col double, "
         "date64_col date, time64_col bigint",
     )
+
+
+@pytest.fixture(scope="session")
+def cdc_oracle():
+    """Reference CDC chunker: sorted ``(id, chunk_hash, chunk_bytes)`` rows
+    for a list of ``(id, payload bytes)``, from DuckDB running the
+    ``multimodal.cdc_chunks_sql`` oracle fragment."""
+    import duckdb
+
+    from datafusion_functions_extra_spark.functions import multimodal as MM
+
+    def chunks(rows):
+        con = duckdb.connect()
+        try:
+            con.execute("CREATE TABLE p (doc_id BIGINT, payload BLOB)")
+            con.executemany(
+                "INSERT INTO p VALUES (?, ?)", [(i, bytes(b)) for i, b in rows]
+            )
+            return sorted(
+                con.execute(
+                    f"WITH {MM.cdc_chunks_sql()} "
+                    "SELECT id, chunk_hash, chunk_bytes FROM chunk"
+                ).fetchall()
+            )
+        finally:
+            con.close()
+
+    return chunks

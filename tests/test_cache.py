@@ -1,34 +1,22 @@
-"""cache.py contract: the tracked-persist registry is one module-global
-list with a documented SINGLE-FLIGHT contract — sequential callers only;
-release_all drains every tracked handle (the documented global behavior,
-not per-caller scoping)."""
+"""cache.loop_conf contract: inside the scope AQE is off and the shuffle
+partition count is the widest leaf's partition count; on the way out,
+even when the body raises, both session confs return to their prior
+values."""
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+import pytest
 
-from datafusion_functions_extra_spark import cache
-
-
-def test_release_all_drains_registry(spark):
-    cache.release_all()  # start clean
-    a = cache.persist_tracked(spark.range(10))
-    b = cache.persist_tracked(spark.range(20))
-    a.count(), b.count()
-    assert a.storageLevel != StorageLevel.NONE
-    assert b.storageLevel != StorageLevel.NONE
-    # the GLOBAL contract: one release_all call drains BOTH handles —
-    # this is exactly why two concurrent queries must not interleave
-    # (either one's release would unpersist the other's blocks)
-    assert cache.release_all() == 2
-    assert a.storageLevel == StorageLevel.NONE
-    assert b.storageLevel == StorageLevel.NONE
-    # idempotent on an empty registry
-    assert cache.release_all() == 0
+from datafusion_functions_extra_spark.cache import loop_conf
 
 
-def test_persist_tracked_returns_same_plan(spark):
-    df = spark.range(5)
-    out = cache.persist_tracked(df)
-    assert out.collect() == df.collect()
-    cache.release_all()
+def test_loop_conf_scopes_and_restores_session_confs(spark):
+    aqe, parts = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    prev = (spark.conf.get(aqe), spark.conf.get(parts))
+    leaves = [spark.range(0, 10, 1, n) for n in (3, 7, 2)]
+    with pytest.raises(RuntimeError, match="loop body failed"):
+        with loop_conf(spark, *leaves):
+            assert spark.conf.get(aqe) == "false"
+            assert spark.conf.get(parts) == "7"
+            raise RuntimeError("loop body failed")
+    assert (spark.conf.get(aqe), spark.conf.get(parts)) == prev

@@ -1,22 +1,24 @@
-"""Round-10 optimization tests: the Arrow-batched NumPy twins of the JVM
-byte pipelines (WAV round trip, CDC chunking, byte histograms) must
-produce row-identical output — every quantity is integer or md5, so any
+"""Round-10 optimization tests: the Arrow-batched NumPy workers (WAV round
+trip, CDC chunking, byte histograms) must produce row-identical output to
+an independent reference — every quantity is integer or md5, so any
 mismatch is a logic bug, not float drift.
 
-Each test computes the SAME relation through the old JVM expression path
-and the new ``mapInPandas`` path on real doc_ids and asserts set
-equality of full rows.
+The WAV runners are pinned against DuckDB replaying the closed-form
+waveform (``audio.sample_expr``, the suite's oracle fragments) without
+touching bytes; the CDC chunker against DuckDB running
+``multimodal.cdc_chunks_sql`` over the same payload bytes; the byte
+histogram against the explode -> groupBy Spark expression plan.
 """
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from datafusion_functions_extra_spark.functions import audio as AUD
 from datafusion_functions_extra_spark.functions import audio_np as ANP
 from datafusion_functions_extra_spark.functions import multimodal as MM
-from datafusion_functions_extra_spark.functions.text import bind_once
 
 
 @pytest.fixture(scope="module")
@@ -44,116 +46,62 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _duck(sql: str) -> list[tuple]:
+    """Run ``sql`` in DuckDB over a ``documents`` table holding _IDS."""
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT)")
+        con.executemany("INSERT INTO documents VALUES (?)", [(i,) for i in _IDS])
+        return sorted(con.execute(sql).fetchall())
+    finally:
+        con.close()
+
+
+def _smp_cte(length: str) -> str:
+    """Closed-form samples 0..length-1 of each doc, as DuckDB list ``smp``."""
+    s = AUD.sample_expr("doc_id", "k")
+    return f"""
+w AS (
+  SELECT doc_id, (doc_id % {AUD.N_MOD} + {AUD.N_BASE})::BIGINT AS n,
+         list_transform(generate_series(0, {length} - 1), k -> {s}) AS smp
+  FROM documents
+)"""
+
+
 def test_wav_fingerprints_match_jvm(spark):
     d = _ids_df(spark)
+    # the sign sequence does not depend on the (positive) amplitude scale,
+    # so both scales must reproduce the scale-8 closed-form fingerprint
+    ref = _duck(
+        f"""
+WITH {_smp_cte(f"(doc_id % {AUD.N_MOD} + {AUD.N_BASE})")}
+SELECT doc_id, n,
+       md5(CAST(n AS VARCHAR) || ':' || array_to_string(
+         list_transform(smp, x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END),
+         ''))
+FROM w
+"""
+    )
     for scale in (8, 4):
-
-        def fingerprint(h):
-            meta = AUD.wav_meta(h)
-            n = F.shiftrightunsigned(meta["data_bytes"], 1)
-            signs = F.array_join(
-                F.transform(
-                    AUD.wav_samples(h, n),
-                    lambda x: F.when(x >= 0, F.lit("1")).otherwise(
-                        F.lit("0")
-                    ),
-                ),
-                "",
-            )
-            return F.struct(
-                n.alias("n_samples"),
-                F.md5(
-                    F.concat(
-                        n.cast("string"), F.lit(":"), signs
-                    ).cast("binary")
-                ).alias("fp"),
-            )
-
-        jvm = d.select(
-            "doc_id",
-            bind_once(
-                F.hex(AUD.synth_wav(F.col("doc_id"), scale=scale)),
-                fingerprint,
-            ).alias("m"),
-        ).select("doc_id", "m.n_samples", "m.fp")
-        assert _rows(jvm) == _rows(ANP.wav_fingerprints(d, "doc_id", scale))
+        assert _rows(ANP.wav_fingerprints(d, "doc_id", scale)) == ref
 
 
 def test_wav_stats_match_jvm(spark):
-    d = _ids_df(spark)
+    from datafusion_functions_extra_spark.suite import _audio_oracle
 
-    def stats(h):
-        meta = AUD.wav_meta(h)
-        n = F.shiftrightunsigned(meta["data_bytes"], 1)
-
-        def fold(smp):
-            heads = F.slice(smp, 1, (n - 1).cast("int"))
-            tails = F.slice(smp, 2, (n - 1).cast("int"))
-            return F.struct(
-                F.array_max(F.transform(smp, F.abs)).alias("peak_abs"),
-                F.aggregate(
-                    smp, F.lit(0).cast("long"), lambda a, x: a + x * x
-                ).alias("energy"),
-                F.aggregate(
-                    F.zip_with(
-                        heads,
-                        tails,
-                        lambda a, b: F.when(
-                            (a >= 0) != (b >= 0), F.lit(1)
-                        ).otherwise(F.lit(0)),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x,
-                ).alias("zero_crossings"),
-            )
-
-        return F.struct(
-            meta["n_channels"].alias("n_channels"),
-            meta["sample_rate"].alias("sample_rate"),
-            meta["bits_per_sample"].alias("bits_per_sample"),
-            n.alias("n_samples"),
-            meta["data_bytes"].alias("data_bytes"),
-            bind_once(AUD.wav_samples(h, n), fold).alias("st"),
-        )
-
-    ref = (
-        _ids_df(spark)
-        .select(
-            "doc_id",
-            bind_once(F.hex(AUD.synth_wav(F.col("doc_id"))), stats).alias(
-                "m"
-            ),
-        )
-        .select(
-            "doc_id",
-            "m.n_channels",
-            "m.sample_rate",
-            "m.bits_per_sample",
-            "m.n_samples",
-            "m.data_bytes",
-            "m.st.peak_abs",
-            "m.st.energy",
-            "m.st.zero_crossings",
-        )
-    )
-    assert _rows(ref) == _rows(ANP.wav_stats(d, "doc_id"))
+    ref = _duck(_audio_oracle())
+    assert _rows(ANP.wav_stats(_ids_df(spark), "doc_id")) == ref
 
 
 def test_silence_segments_match_jvm(spark):
-    """Pin against the suite's own silence query on a tiny parquet dir —
-    the simplest faithful JVM reference is the query itself."""
-    from datafusion_functions_extra_spark import suite
+    from datafusion_functions_extra_spark.suite import (
+        _QUIET_ABS,
+        _silence_oracle,
+    )
 
-    got = suite.QUERIES["audio_silence_segments"](
-        spark, "/root/testdata/sf0.001"
-    )
-    quiet_abs = 2048
-    d = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id")
-    )
-    ref = ANP.silence_segments(d, quiet_abs, "doc_id")
-    assert _rows(got) == _rows(ref)
+    ref = _duck(_silence_oracle())
+    got = ANP.silence_segments(_ids_df(spark), _QUIET_ABS, "doc_id")
+    assert _rows(got) == ref
 
 
 def test_dft_twiddle_sums_match_jvm(spark):
@@ -163,34 +111,18 @@ def test_dft_twiddle_sums_match_jvm(spark):
         _twiddle,
     )
 
-    d = _ids_df(spark)
-
-    def clip(h):
-        n = F.shiftrightunsigned(AUD.wav_meta(h)["data_bytes"], 1)
-        return AUD.wav_samples(h, F.least(n, F.lit(_AUDIO_DFT_WINDOW)))
-
-    base = d.select(
-        "doc_id",
-        bind_once(F.hex(AUD.synth_wav(F.col("doc_id"))), clip).alias("smp"),
+    sums = ", ".join(
+        f"list_sum(list_transform(generate_series(0, {_AUDIO_DFT_WINDOW - 1}),"
+        f" k -> smp[k + 1] * ({_twiddle(pp, kind)}::BIGINT[])[(k % {pp}) + 1]))"
+        f"::BIGINT"
+        for pp in _PGRAM_PERIODS
+        for kind in ("cos", "sin")
     )
-    ex48 = base.select("doc_id", F.posexplode("smp").alias("k0", "s"))
-    aggs = []
-    for pp in _PGRAM_PERIODS:
-        for kind, alias in (("cos", f"sc_{pp}"), ("sin", f"ss_{pp}")):
-            tab = F.array(*[F.lit(v) for v in _twiddle(pp, kind)])
-            aggs.append(
-                F.sum(
-                    F.col("s")
-                    * F.element_at(tab, (F.col("k0") % pp + 1).cast("int"))
-                )
-                .cast("long")
-                .alias(alias)
-            )
-    ref = ex48.groupBy("doc_id").agg(*aggs)
+    ref = _duck(f"WITH {_smp_cte(str(_AUDIO_DFT_WINDOW))} SELECT doc_id, {sums} FROM w")
     got = ANP.dft_twiddle_sums(
-        d, _PGRAM_PERIODS, _twiddle, _AUDIO_DFT_WINDOW, "doc_id"
+        _ids_df(spark), _PGRAM_PERIODS, _twiddle, _AUDIO_DFT_WINDOW, "doc_id"
     )
-    assert _rows(ref) == _rows(got)
+    assert _rows(got) == ref
 
 
 def _payloads_df(spark):
@@ -203,21 +135,26 @@ def _payloads_df(spark):
     ).withColumn("mime", MM.sniff_mime(F.col("payload")))
 
 
-def test_cdc_chunks_np_matches_jvm(spark):
+def test_cdc_chunks_np_matches_jvm(spark, cdc_oracle):
     p = _payloads_df(spark)
-    jvm = MM.cdc_chunks(p, "payload", "doc_id", keep_cols=("mime",))
+    rows = p.collect()
+    mime = {r.doc_id: r.mime for r in rows}
+    ref = sorted(
+        (i, mime[i], h, n)
+        for i, h, n in cdc_oracle([(r.doc_id, r.payload) for r in rows])
+    )
     got = MM.cdc_chunks_np(p, "payload", "doc_id", keep_cols=("mime",))
-    assert _rows(jvm) == _rows(got)
+    assert _rows(got) == ref
 
 
-def test_cdc_chunks_np_short_payloads(spark):
+def test_cdc_chunks_np_short_payloads(spark, cdc_oracle):
     """Payloads shorter than the window form one whole-payload chunk."""
     rows = [(1, bytearray(b"abc")), (2, bytearray(b"\x00" * 7)),
             (3, bytearray(b"x" * 8)), (4, bytearray(b"0123456789abcdef"))]
     p = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-    jvm = MM.cdc_chunks(p, "payload", "doc_id")
-    got = MM.cdc_chunks_np(p, "payload", "doc_id")
-    assert _rows(jvm) == _rows(got)
+    got = _rows(MM.cdc_chunks_np(p, "payload", "doc_id"))
+    assert got == cdc_oracle(rows)
+    assert [n for i, _, n in got if i in (1, 2)] == [3, 7]
 
 
 def test_byte_histogram_np_matches_jvm(spark):

@@ -204,27 +204,116 @@ def test_components_loop_compress_matches_plain(spark, monkeypatch):
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
-def test_components_contraction_runs_without_the_package(
-    spark, monkeypatch, tmp_path
-):
-    """The partition-local contraction components_from_pairs hands to
-    mapInPandas must ship BY VALUE.  A Python worker whose cwd and path
-    lack this repository (a benchmark run area, an installed wheel's
-    cluster) cannot import the package, and a module-level function —
-    which cloudpickle pickles by reference — fails there with
-    ModuleNotFoundError.  The captured function is unpickled and run in
-    such a process."""
-    import os
-    import subprocess
-    import sys
+def _worker_case(name):
+    """(builder, batch) for one pandas-worker case: ``builder(spark)``
+    builds the operator over a tiny DataFrame so the function it hands to
+    mapInPandas can be captured; ``batch`` is one input batch for it."""
+    import pandas as pd
 
-    from pyspark import cloudpickle
-    from pyspark.sql.classic.dataframe import DataFrame
-
+    from datafusion_functions_extra_spark.functions import audio_np as ANP
+    from datafusion_functions_extra_spark.functions import multimodal as MM
     from datafusion_functions_extra_spark.operators.similarity import (
         components_from_pairs,
     )
+    from datafusion_functions_extra_spark.suite import (
+        _AUDIO_DFT_WINDOW,
+        _PGRAM_PERIODS,
+        _QUIET_ABS,
+        _twiddle,
+    )
+    from tests.test_multimodal import _encode_png
 
+    def payloads(spark):
+        return spark.createDataFrame([], "doc_id long, payload binary")
+
+    def ids(spark):
+        return spark.range(1).select(F.col("id").alias("doc_id"))
+
+    png = _encode_png([[10, 20, 30], [40, 50, 60]], channels=3)
+    blobs = pd.DataFrame(
+        {"doc_id": [1, 2], "payload": [png, b"RIFF\x00\x00\x00\x00WAVE"]}
+    )
+    clips = pd.DataFrame({"doc_id": [0, 7, 13]})
+    return {
+        "components_from_pairs": (
+            lambda spark: components_from_pairs(
+                spark.range(2).select(F.col("id")),
+                spark.createDataFrame([(0, 1)], "id_a long, id_b long"),
+            ),
+            pd.DataFrame({"id_a": [3, 5, 9], "id_b": [4, 4, 8]}),
+        ),
+        "decode_meta": (
+            lambda spark: MM.decode_meta(payloads(spark), "payload", "doc_id"),
+            blobs,
+        ),
+        "decode_pixels": (
+            lambda spark: MM.decode_pixels(
+                payloads(spark), "payload", "doc_id"
+            ),
+            blobs,
+        ),
+        "cdc_chunks_np": (
+            lambda spark: MM.cdc_chunks_np(
+                payloads(spark), "payload", "doc_id"
+            ),
+            pd.DataFrame({"id": [1], "payload": [bytes(range(200))]}),
+        ),
+        "byte_histogram_np": (
+            lambda spark: MM.byte_histogram_np(
+                payloads(spark), "payload", "doc_id"
+            ),
+            blobs,
+        ),
+        "wav_fingerprints": (
+            lambda spark: ANP.wav_fingerprints(ids(spark), "doc_id", 4),
+            clips,
+        ),
+        "wav_stats": (lambda spark: ANP.wav_stats(ids(spark)), clips),
+        "silence_segments": (
+            lambda spark: ANP.silence_segments(ids(spark), _QUIET_ABS),
+            clips,
+        ),
+        "dft_twiddle_sums": (
+            lambda spark: ANP.dft_twiddle_sums(
+                ids(spark), _PGRAM_PERIODS, _twiddle, _AUDIO_DFT_WINDOW
+            ),
+            clips,
+        ),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "components_from_pairs",
+        "decode_meta",
+        "decode_pixels",
+        "cdc_chunks_np",
+        "byte_histogram_np",
+        "wav_fingerprints",
+        "wav_stats",
+        "silence_segments",
+        "dft_twiddle_sums",
+    ],
+)
+def test_worker_runs_without_the_package(spark, monkeypatch, tmp_path, case):
+    """A function the library hands to mapInPandas must ship BY VALUE.
+    A Python worker whose cwd and path lack this repository (a benchmark
+    run area, an installed wheel's cluster) cannot import the package,
+    and a module-level function — which cloudpickle pickles by reference
+    unless its module is registered by value — fails there with
+    ModuleNotFoundError.  The captured function is unpickled and run on
+    one batch in such a process, and must return what it returns here."""
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    build, batch = _worker_case(case)
     funcs = []
     map_in_pandas = DataFrame.mapInPandas
 
@@ -233,21 +322,16 @@ def test_components_contraction_runs_without_the_package(
         return map_in_pandas(self, func, schema, *args, **kwargs)
 
     monkeypatch.setattr(DataFrame, "mapInPandas", capturing)
-    components_from_pairs(
-        spark.range(2).select(F.col("id")),
-        spark.createDataFrame([(0, 1)], "id_a long, id_b long"),
-    )
-    (contract,) = funcs
-    (tmp_path / "contract.pkl").write_bytes(cloudpickle.dumps(contract))
+    build(spark)
+    (func,) = funcs
+    (tmp_path / "case.pkl").write_bytes(cloudpickle.dumps((func, batch)))
 
     code = """
 import importlib.util, pickle
 import pandas as pd
 assert importlib.util.find_spec("datafusion_functions_extra_spark") is None
-contract = pickle.load(open("contract.pkl", "rb"))
-batch = pd.DataFrame({"id_a": [3, 5, 9], "id_b": [4, 4, 8]})
-out = pd.concat(contract(iter([batch])))
-print(sorted(zip(out["id_a"].tolist(), out["id_b"].tolist())))
+func, batch = pickle.load(open("case.pkl", "rb"))
+pickle.dump(pd.concat(func(iter([batch]))), open("out.pkl", "wb"))
 """
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)
@@ -261,10 +345,17 @@ print(sorted(zip(out["id_a"].tolist(), out["id_b"].tolist())))
         capture_output=True, text=True, timeout=120,
     )
     assert run.returncode == 0, run.stderr
-    # components {3, 4, 5} and {8, 9} as stars around their minimum ids
-    assert run.stdout.strip() == str(
-        [(3, 4), (3, 5), (4, 3), (5, 3), (8, 9), (9, 8)]
+    got = pickle.loads((tmp_path / "out.pkl").read_bytes())
+    want = pd.concat(func(iter([batch])))
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(
+        got.reset_index(drop=True), want.reset_index(drop=True)
     )
+    if case == "components_from_pairs":
+        # components {3, 4, 5} and {8, 9} as stars around their minimum ids
+        assert sorted(zip(got["id_a"].tolist(), got["id_b"].tolist())) == [
+            (3, 4), (3, 5), (4, 3), (5, 3), (8, 9), (9, 8)
+        ]
 
 
 def test_cached_parquet_schema_is_metadata_only(spark):
@@ -385,8 +476,8 @@ def test_sketch_builders_leave_no_session_conf(spark):
 
 
 def test_cdc_and_histogram_workers_drop_null_payloads(spark):
-    """NULL payloads must contribute no rows — the JVM hex(NULL)->explode
-    path's semantics (ADVICE r10 item 1)."""
+    """NULL payloads must contribute no rows — the DuckDB oracle's
+    hex(NULL) semantics (ADVICE r10 item 1)."""
     from datafusion_functions_extra_spark.functions.multimodal import (
         byte_histogram_np,
         cdc_chunks_np,
@@ -403,9 +494,10 @@ def test_cdc_and_histogram_workers_drop_null_payloads(spark):
 
 
 def test_synth_wav_twin_rejects_negative_ids():
-    """The NumPy synth twin only matches the JVM remainder semantics for
-    non-negative doc ids; a negative id must fail loudly, not diverge
-    silently (ADVICE r10 item 5)."""
+    """The NumPy WAV synth only matches the SQL remainder semantics of
+    the oracles' ``audio.sample_expr`` for non-negative doc ids; a
+    negative id must fail loudly, not diverge silently (ADVICE r10
+    item 5)."""
     from datafusion_functions_extra_spark.functions.audio_np import (
         _synth_wav_bytes,
     )

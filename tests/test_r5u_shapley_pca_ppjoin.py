@@ -142,100 +142,41 @@ def test_pca_two_components(spark, sf):
     assert evr1 + evr2 <= 1.0 + 1e-6
 
 
-def test_ppjoin_equals_allpairs_with_fewer_candidates(spark, sf):
-    from datafusion_functions_extra_spark.operators import similarity as SIM
-    from datafusion_functions_extra_spark.suite import QUERIES, load_table
+def test_ppjoin_matches_brute_force(spark, sf):
+    """Both exact-Jaccard suite entries (AllPairs' name runs PPJoin) equal
+    a Python all-pairs brute force over the real shingle sets: the
+    length and positional prunes change the plan, not the result."""
+    from pyspark.sql import functions as F
 
-    pp = {
-        (r.id_a, r.id_b): (r.n_inter, r.jacc)
-        for r in QUERIES["ppjoin_jaccard_pairs"](spark, sf).collect()
-    }
-    ap = {
-        (r.id_a, r.id_b): (r.n_inter, r.jacc)
-        for r in QUERIES["prefix_filter_jaccard_pairs"](
-            spark, sf
-        ).collect()
-    }
-    # the positional filter changes the plan, not the result
-    assert pp == ap
-    assert len(pp) > 0
-
-    # candidate-count reduction is real: rebuild both candidate stages
-    d = load_table(spark, sf, "documents")
-    from pyspark.sql import Window, functions as F
-    from datafusion_functions_extra_spark.functions.distribution import (
-        global_rank,
-    )
     from datafusion_functions_extra_spark.functions.text import (
         shingles_or_whole,
     )
+    from datafusion_functions_extra_spark.suite import QUERIES, load_table
 
     pct = 60
-    tok = d.select(
-        F.col("doc_id").alias("id"),
-        F.explode(F.array_distinct(shingles_or_whole("text"))).alias(
-            "token"
-        ),
-    )
-    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df_t"))
-    ranked = global_rank(
-        freq, [F.col("df_t").asc(), F.col("token").asc()], "trank"
-    ).select("token", "trank")
-    sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    wd = Window.partitionBy("id").orderBy(F.col("trank").asc())
-    prefix = (
-        tok.join(ranked, "token")
-        .withColumn("pos", F.row_number().over(wd))
-        .join(sizes, "id")
-        .where(
-            F.col("pos")
-            <= F.col("sz")
-            - F.floor((F.lit(pct) * F.col("sz") + 99) / 100)
-            + 1
+    sets = {
+        r.doc_id: set(r.g)
+        for r in load_table(spark, sf, "documents")
+        .select(
+            "doc_id", F.array_distinct(shingles_or_whole("text")).alias("g")
         )
-        .select("id", "token", "pos", "sz")
-    )
-    a = prefix.select(
-        F.col("id").alias("id_a"),
-        "token",
-        F.col("pos").alias("pos_a"),
-        F.col("sz").alias("sz_a"),
-    )
-    b = prefix.select(
-        F.col("id").alias("id_b"),
-        "token",
-        F.col("pos").alias("pos_b"),
-        F.col("sz").alias("sz_b"),
-    )
-    raw = (
-        a.join(b, "token")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .count()
-    )
-    alpha = F.floor(
-        (
-            F.lit(pct) * (F.col("sz_a") + F.col("sz_b"))
-            + F.lit(100 + pct - 1)
-        )
-        / F.lit(100 + pct)
-    )
-    ubound = F.lit(1) + F.least(
-        F.col("sz_a") - F.col("pos_a"), F.col("sz_b") - F.col("pos_b")
-    )
-    pruned = (
-        a.join(b, "token")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            (F.lit(100) * F.col("sz_b") >= F.lit(pct) * F.col("sz_a"))
-            & (F.lit(100) * F.col("sz_a") >= F.lit(pct) * F.col("sz_b"))
-        )
-        .where(ubound >= alpha)
-        .select("id_a", "id_b")
-        .distinct()
-        .count()
-    )
-    assert pruned <= raw
-    # every surviving true pair is still among the pruned candidates
-    assert pruned >= len(pp)
+        .collect()
+    }
+    ids = sorted(sets)
+    want = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            inter = len(sets[a] & sets[b])
+            union = len(sets[a]) + len(sets[b]) - inter
+            if inter and 100 * inter >= pct * union:
+                want[(a, b)] = (inter, _r6(inter / union))
+    assert want
+    for name in ("ppjoin_jaccard_pairs", "prefix_filter_jaccard_pairs"):
+        got = {
+            (r.id_a, r.id_b): (r.n_inter, r.jacc)
+            for r in QUERIES[name](spark, sf).collect()
+        }
+        assert set(got) == set(want), name
+        for k, (inter, jacc) in want.items():
+            assert got[k][0] == inter, (name, k)
+            assert got[k][1] == pytest.approx(jacc, abs=1e-9), (name, k)

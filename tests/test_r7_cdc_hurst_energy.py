@@ -20,7 +20,7 @@ def test_cdc_chunks_tile_payload_exactly(spark):
             "payload"
         ),
     )
-    ch = MM.cdc_chunks(p, "payload", "doc_id")
+    ch = MM.cdc_chunks_np(p, "payload", "doc_id")
     agg = ch.groupBy("id").agg(F.sum("chunk_bytes").alias("s"))
     j = p.select(
         F.col("doc_id").alias("id"), F.length("payload").alias("n")
@@ -29,25 +29,25 @@ def test_cdc_chunks_tile_payload_exactly(spark):
     assert j.count() == p.count()
 
 
-def test_cdc_chunks_resist_offset_shift(spark):
+def test_cdc_chunks_resist_offset_shift(spark, cdc_oracle):
     """The CDC property fixed-size blocking lacks: prepending bytes to a
     payload leaves the trailing chunk hashes identical (only the chunks
     around the insertion change)."""
-    base = spark.createDataFrame(
-        [(1, b"A" * 7 + bytes(range(256)) * 8)], "id long, payload binary"
+    rows = [
+        (1, b"A" * 7 + bytes(range(256)) * 8),
+        (2, b"PREFIX-INSERTED!" + b"A" * 7 + bytes(range(256)) * 8),
+    ]
+    got = sorted(
+        tuple(r)
+        for r in MM.cdc_chunks_np(
+            spark.createDataFrame(rows, "id long, payload binary"),
+            "payload",
+            "id",
+        ).collect()
     )
-    shifted = spark.createDataFrame(
-        [(2, b"PREFIX-INSERTED!" + b"A" * 7 + bytes(range(256)) * 8)],
-        "id long, payload binary",
-    )
-    h1 = {
-        r.chunk_hash
-        for r in MM.cdc_chunks(base, "payload", "id").collect()
-    }
-    h2 = {
-        r.chunk_hash
-        for r in MM.cdc_chunks(shifted, "payload", "id").collect()
-    }
+    assert got == cdc_oracle(rows)
+    h1 = {h for i, h, _ in got if i == 1}
+    h2 = {h for i, h, _ in got if i == 2}
     shared = h1 & h2
     # most of the un-shifted content's chunks survive the insertion
     assert len(shared) >= max(1, len(h1) - 3)

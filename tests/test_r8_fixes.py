@@ -1,10 +1,10 @@
 """Round-8 advisory/verdict fixes pinned as tests:
 
-- ``cdc_chunks`` on payloads SHORTER than ``CDC_WINDOW`` (the r7 advisor
-  boundary bug: ``F.sequence(8, L)`` descends for L<8, so the filter
-  lambda tapped index 0 / negative indices — crash or silent
-  mis-chunking; DuckDB's ``generate_series(8, L)`` is empty).  Short
-  payloads must yield exactly one whole-payload chunk.
+- CDC chunking on payloads SHORTER than ``CDC_WINDOW`` (the r7 advisor
+  boundary bug: a boundary scan from byte 8 to L descends for L<8 and
+  taps index 0 / negative indices — crash or silent mis-chunking;
+  DuckDB's ``generate_series(8, L)`` is empty).  Short payloads must
+  yield exactly one whole-payload chunk, as the DuckDB oracle does.
 - float ``mode`` edge semantics vs the reference's bit-pattern
   accumulator (``/root/reference/src/common/mode/native.rs:142-261``):
   Spark's NormalizeFloatingNumbers treats ``-0.0 == 0.0`` as one groupBy
@@ -19,53 +19,39 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
 
 from datafusion_functions_extra_spark.functions import multimodal as MM
 from datafusion_functions_extra_spark.operators.mode import mode_agg
 
 
-def test_cdc_chunks_short_payload_single_whole_chunk(spark):
+def test_cdc_chunks_short_payload_single_whole_chunk(spark, cdc_oracle):
     # payloads of 1..7 bytes (below CDC_WINDOW=8) plus boundary cases 8, 9
-    rows = [(f"p{n}", bytes(range(n))) for n in (1, 2, 7, 8, 9)]
-    df = spark.createDataFrame(
-        rows,
-        StructType(
-            [
-                StructField("doc_id", __import__("pyspark").sql.types.StringType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    out = MM.cdc_chunks(df, "payload", "doc_id").collect()
-    by_id: dict[str, list] = {}
+    rows = [(n, bytes(range(n))) for n in (1, 2, 7, 8, 9)]
+    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
+    out = MM.cdc_chunks_np(df, "payload", "doc_id").collect()
+    assert sorted(tuple(r) for r in out) == cdc_oracle(rows)
+    by_id: dict[int, list] = {}
     for r in out:
         by_id.setdefault(r["id"], []).append(r)
     # short payloads: exactly one chunk covering the whole payload
     for n in (1, 2, 7):
-        chunks = by_id[f"p{n}"]
+        chunks = by_id[n]
         assert len(chunks) == 1, f"p{n}: expected whole-payload chunk"
         assert chunks[0]["chunk_bytes"] == n
     # >= window payloads still tile exactly
     for n in (8, 9):
-        assert sum(c["chunk_bytes"] for c in by_id[f"p{n}"]) == n
+        assert sum(c["chunk_bytes"] for c in by_id[n]) == n
 
 
-def test_cdc_chunks_empty_payload_no_rows(spark):
-    df = spark.createDataFrame(
-        [("e", b"")],
-        StructType(
-            [
-                StructField("doc_id", __import__("pyspark").sql.types.StringType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+def test_cdc_chunks_empty_payload_no_rows(spark, cdc_oracle):
+    rows = [(0, b"")]
+    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
     # L=0: boundary list is [0] after the final-byte fallback; the one
     # "chunk" has zero bytes — accept either zero rows or one empty chunk,
-    # but never a crash
-    out = MM.cdc_chunks(df, "payload", "doc_id").collect()
+    # but never a crash, and agree with the oracle
+    out = MM.cdc_chunks_np(df, "payload", "doc_id").collect()
     assert all(r["chunk_bytes"] == 0 for r in out)
+    assert sorted(tuple(r) for r in out) == cdc_oracle(rows)
 
 
 def test_float_mode_zero_normalization_and_nan_grouping(spark):

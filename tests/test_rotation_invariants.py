@@ -1,17 +1,6 @@
-"""Structural invariants of the driver-window rotation in suite.py.
-
-The driver's hard correctness gate covers roughly the first 50 entries
-of ``suite.QUERIES`` in dict order, so ``_rotate_for_driver_window``
-must keep two properties true EVERY round or verification debt stops
-draining:
-
-1. every oracle-able never-driver-verified query sorts BEFORE every
-   driver-verified one (the window always drains the debt first);
-2. the declared rows-only sketch queries never displace a hash-able
-   never-verified query from the window — they are either explicitly
-   head-parked (a one-round documentation move, r09) or dead-last.
-
-These are order properties of the module's import-time state, so the
+"""Order invariant of ``suite.QUERIES``: the declared rows-only sketch
+queries (no oracle, so no hash to earn) come last, after every hash-able
+query.  This is a property of the module's import-time state, so the
 test needs no SparkSession.
 """
 
@@ -22,28 +11,7 @@ from datafusion_functions_extra_spark import suite
 ROWS_ONLY = {"price_quantiles_approx", "approx_distinct_users"}
 
 
-def test_never_verified_sort_before_verified():
-    names = list(suite.QUERIES)
-    ranks = {n: i for i, n in enumerate(names)}
-    never = [
-        n for n in names
-        if n in suite.ORACLES and n not in suite._DRIVER_VERIFIED
-        and n not in ROWS_ONLY
-    ]
-    verified = [n for n in names if n in suite._DRIVER_VERIFIED]
-    if never and verified:
-        assert max(ranks[n] for n in never) < min(ranks[n] for n in verified), (
-            "a driver-verified query outranks a never-verified one — the "
-            "window would re-check old greens while debt sits outside it"
-        )
-
-
 def test_rows_only_dead_last():
-    # r10+: the r09 one-shot head parking is cleared and CORRECTNESS_r09
-    # (committed) holds the sketches' documented-by-design rows, so the
-    # ONLY legal position is dead-last — "either head or tail" would let
-    # a forgotten parking silently burn 2 of ~50 window slots every
-    # round (ADVICE r9 item 2)
     names = list(suite.QUERIES)
     ranks = {n: i for i, n in enumerate(names)}
     n_total = len(names)
@@ -52,12 +20,5 @@ def test_rows_only_dead_last():
         r = ranks[n]
         assert r >= n_total - len(ROWS_ONLY), (
             f"{n} is not dead-last (rank {r}/{n_total}) — it can never "
-            "earn a hash, any earlier slot is a wasted driver check"
+            "earn a hash, so an earlier slot is a wasted oracle check"
         )
-
-
-def test_oracle_dict_order_matches_queries():
-    # the driver zips queries() and oracle_sql() by name; keeping ORACLES
-    # in the same relative order makes eyeballing diffs sane
-    q = [n for n in suite.QUERIES if n in suite.ORACLES]
-    assert q == list(suite.ORACLES)

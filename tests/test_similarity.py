@@ -244,10 +244,10 @@ def test_ensure_signatures_table_builds_once_and_invalidates(spark, tmp_path):
 
 class TestPrefixFilterJaccard:
     def test_matches_brute_force(self, spark):
-        """The prefix-filtered exact join must equal all-pairs exact
-        Jaccard over shingle sets (completeness + exactness)."""
+        """The prefix-filtered exact join (PPJoin) must equal all-pairs
+        exact Jaccard over shingle sets (completeness + exactness)."""
         from datafusion_functions_extra_spark.operators.similarity import (
-            prefix_filter_jaccard_pairs,
+            ppjoin_jaccard_pairs,
         )
         from datafusion_functions_extra_spark.functions.text import (
             shingles_or_whole,
@@ -261,13 +261,15 @@ class TestPrefixFilterJaccard:
             "the quick brown fox jumps over the lazy dog",  # exact dup of 1
             "short doc",
             "short doc",  # exact dup of 5 via whole-text fallback
+            "one two three four five",
+            "one two three four six",  # 2 of 4 shingles: J exactly 0.5
         ]
         docs = spark.createDataFrame(
             list(enumerate(texts, 1)), "doc_id bigint, text string"
         )
         got = {
             (r.id_a, r.id_b): (r.n_inter, r.jacc)
-            for r in prefix_filter_jaccard_pairs(
+            for r in ppjoin_jaccard_pairs(
                 docs, "text", "doc_id", threshold_pct=50
             ).collect()
         }

@@ -50,15 +50,16 @@ _GRID = (
 #: a data-sized relation.
 #: queries whose executed plan carries Python-on-executor operators BY
 #: DESIGN — each an Arrow-batched worker that is either the decode
-#: plumbing itself or an r10 NumPy twin pytest-pinned bit-identical to
-#: the JVM expression pipeline it replaced (tests/test_r10_arrow_np.py,
-#: tests/test_r10_knn_scorer.py).  Python anywhere else still flags.
+#: plumbing itself or an r10 NumPy worker pytest-pinned bit-identical to
+#: an independent reference: DuckDB replaying the oracle fragments
+#: (tests/test_r10_arrow_np.py) or the Spark window plan over the
+#: scored relation (tests/test_r10_knn_scorer.py).  Python anywhere else still flags.
 PY_OK = {
     "multimodal_decode_meta",   # Arrow decode plumbing — Python IS the op
     "multimodal_frame_samples", # same (frame sampling + md5)
-    "audio_fingerprint_pairs",  # audio_np WAV round-trip twin (2 scorers)
-    "audio_wav_stats",          # audio_np twin
-    "audio_silence_segments",   # audio_np twin
+    "audio_fingerprint_pairs",  # audio_np WAV round trip (2 scorers)
+    "audio_wav_stats",          # audio_np WAV round trip
+    "audio_silence_segments",   # audio_np WAV round trip
     "audio_spectral_centroid",  # audio_np twiddle sums (checkpointed leaf)
     "multimodal_cdc_chunks",    # cdc_chunks_np byte chunker
     "multimodal_cdc_incremental",  # same, behind an eager checkpoint
@@ -656,8 +657,8 @@ def main() -> int:
         "Health criteria: no CartesianProduct anywhere; SortMergeJoin only",
         "where both sides are large; Python operators only in the annotated",
         "Arrow-batched worker queries (PY_OK below — decode plumbing, the",
-        "r10 NumPy byte/WAV twins and the kNN block scorer, each",
-        "pytest-pinned bit-identical to the JVM expressions they replaced);",
+        "r10 NumPy byte/WAV workers and the kNN block scorer, each",
+        "pytest-pinned bit-identical to an independent reference);",
         "parquet ReadSchema pruned to used columns;",
         "BroadcastNestedLoopJoin only for annotated scalar join-backs;",
         "single-partition WindowExec only over annotated BOUNDED relations",

@@ -2,7 +2,7 @@
 
 from pyspark import cloudpickle
 
-from . import audio_np, multimodal
+from . import audio_np, knn_np, multimodal
 from .aggregates import kurtosis, kurtosis_pop, max_by, min_by, skewness  # noqa: F401
 from .distribution import (  # noqa: F401
     discrete_percentile_cutoffs,
@@ -12,8 +12,9 @@ from .distribution import (  # noqa: F401
 from .registry import FUNCTIONS, all_extra_aggregate_functions, register_all  # noqa: F401
 
 # The mapInPandas workers of these modules call module-level helpers
-# (_roundtrip_iter, _sniff_py, _png_decode_py).  cloudpickle ships a module
-# function by reference, which a Python worker that cannot import this
-# package fails to load; by value, each worker carries its helpers with it.
-for _worker_module in (audio_np, multimodal):
+# (_roundtrip_iter, _sniff_py, _png_decode_py, round6_scaled).  cloudpickle
+# ships a module function by reference, which a Python worker that cannot
+# import this package fails to load; by value, each worker carries its
+# helpers with it.
+for _worker_module in (audio_np, knn_np, multimodal):
     cloudpickle.register_pickle_by_value(_worker_module)

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import leaf
+
 
 def global_cumsum(
     df: DataFrame,
@@ -68,7 +70,7 @@ def global_cumsum_multi(
     ranged = (
         df.repartitionByRange(n_part, *order)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(leaf)
     )
     wl = (
         Window.partitionBy("_pid")
@@ -123,7 +125,7 @@ def global_rank(
     ranged = (
         df.repartitionByRange(n_part, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(leaf)
     )
     wl = Window.partitionBy("_pid").orderBy(*order_cols)
     local = ranged.withColumn("_lrn", F.row_number().over(wl))
@@ -198,7 +200,7 @@ def rank_sum_auc(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col(label_col).cast("long")).alias("n_pos"),
         )
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     )
     c = global_cumsum(h, score_col, "n", "cum")
     u = c.agg(

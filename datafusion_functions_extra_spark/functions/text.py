@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from ..cache import leaf
 from .aggregates import ColumnOrName, _col
 from .rounding import r6n
 
@@ -41,27 +42,30 @@ SHINGLE_WORDS = 3
 
 
 #: per-process memo of built Column expression trees for the pure
-#: builders below, keyed by (builder, arg reprs).  Same rationale and
-#: safety argument as operators/similarity._COL_MEMO (r11): the builders
-#: are pure functions of module constants and their inputs, Columns are
-#: immutable unresolved expression trees resolved per plan (valid across
-#: DataFrames and in-process session restarts), and constructing the
-#: bigger ones costs 0.1-0.4s of py4j round-trips per call — paid by
-#: every text/quality query's timed region.
+#: builders below (here and in operators/similarity), keyed by (builder,
+#: args).  The builders are pure functions of module constants and their
+#: inputs, and constructing the bigger ones costs 0.1-1.4s of py4j
+#: round-trips per call (r11) — paid by every text/quality/LSH query's
+#: timed region.  A Column built from column NAMES is an unresolved
+#: expression tree resolved per plan, valid across DataFrames and
+#: in-process session restarts.  A Column argument is never a key: it
+#: may be bound to one DataFrame's plan (``df["text"]``) while rendering
+#: exactly like ``F.col("text")``, and the tree built from it raises
+#: MISSING_ATTRIBUTES on a DataFrame derived from that plan.
 _COL_MEMO: dict = {}
 
 
 def memo_column(fn):
-    """Memoize a pure Column-builder by its args' string reprs."""
+    """Memoize a pure Column-builder on calls whose column arguments are
+    all plain names; a call with a Column argument builds a fresh Column
+    and stores nothing."""
     import functools
 
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
-        key = (
-            fn.__name__,
-            tuple(str(a) for a in args),
-            tuple(sorted((k, str(v)) for k, v in kwargs.items())),
-        )
+        if any(isinstance(a, Column) for a in (*args, *kwargs.values())):
+            return fn(*args, **kwargs)
+        key = (fn, args, tuple(sorted(kwargs.items())))
         col = _COL_MEMO.get(key)
         if col is None:
             col = fn(*args, **kwargs)
@@ -511,7 +515,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    tf = term_frequencies(df, text_col, id_col).localCheckpoint(eager=True)
+    tf = term_frequencies(df, text_col, id_col).transform(leaf)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -570,7 +574,7 @@ def build_vocab(
     ranged = (
         counts.repartitionByRange(n_part, *order)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(leaf)
     )
     wl = Window.partitionBy("_pid").orderBy(*order)
     local = ranged.withColumn("_lrn", F.row_number().over(wl))

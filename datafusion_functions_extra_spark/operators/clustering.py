@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import leaf
 from .similarity import EMBEDDING_DIM, IVF_CENTROID_IDS, _as_double
 from ..functions.rounding import r6n, r6n_sql
 
@@ -194,7 +195,7 @@ def _pq_train_sub(vecs: DataFrame, seed_ids, n_iters: int):
     # leaf in every consumer's analyzed plan (r10: a lazy persist
     # re-inlined four subspaces' Lloyd chains into a 1,390-line /
     # 122-Exchange pq_adc_topk plan)
-    centroids = centroids.localCheckpoint(eager=True)
+    centroids = leaf(centroids)
     return centroids, _assign(vecs, centroids)
 
 
@@ -532,7 +533,7 @@ def kmeans_silhouette(
     # the final centroid relation is consumed twice (the last assign
     # above and the all-pairs scoring below) — pin it so both consumers
     # see one materialization (k rows; the §9.1 double-consumer lesson)
-    centroids = centroids.localCheckpoint()
+    centroids = leaf(centroids)
     scored = vecs.crossJoin(F.broadcast(centroids)).select(
         "vec_id",
         "cid",

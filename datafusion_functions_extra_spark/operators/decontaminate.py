@@ -112,18 +112,17 @@ def bench_span_overlap(
     per-document islands window (bounded by doc length, never
     corpus-sized).  Positions are 1-based inclusive token indexes; docs
     shorter than ``k`` tokens participate via the whole-text fallback
-    shingle (the corpus-wide convention of ``_shingles_or_whole``), with
+    shingle (the corpus-wide convention of ``shingles_or_whole``), with
     ``span_end``/``n_tokens`` clamped to the document's actual token
     count so the span never overstates how much text to excise."""
     from pyspark.sql import Window  # noqa: PLC0415
 
     from ..functions.text import SHINGLE_WORDS  # noqa: PLC0415
-    from .similarity import _shingles_or_whole  # noqa: PLC0415
 
     if k != SHINGLE_WORDS:
         raise ValueError(
             f"bench_span_overlap is pinned to the corpus shingle width "
-            f"{SHINGLE_WORDS} (_shingles_or_whole); got k={k}"
+            f"{SHINGLE_WORDS} (shingles_or_whole); got k={k}"
         )
     from ..functions.text import tokens as _tokens  # noqa: PLC0415
 
@@ -131,12 +130,12 @@ def bench_span_overlap(
         train.select(
             F.col(id_col),
             F.size(_tokens(F.col(text_col))).alias("n_toks"),
-            F.posexplode(_shingles_or_whole(F.col(text_col))).alias("p0", "h"),
+            F.posexplode(shingles_or_whole(text_col)).alias("p0", "h"),
         )
         .select(F.col(id_col), "n_toks", (F.col("p0") + 1).alias("s"), "h")
     )
     bsh = bench.select(
-        F.explode(_shingles_or_whole(F.col(text_col))).alias("h")
+        F.explode(shingles_or_whole(text_col)).alias("h")
     ).distinct()
     # clamp span_end to the document's token count: a doc shorter than k
     # tokens matches via the whole-text fallback shingle, and an

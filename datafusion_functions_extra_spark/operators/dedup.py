@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import normalize_text
+from ..functions.text import normalize_text, shingles_or_whole
 
 
 def content_key(c) -> Column:
@@ -74,14 +74,14 @@ def duplicate_token_spans(
     """
     from pyspark.sql import Window
 
-    from .similarity import hash60, _shingles_or_whole  # noqa: PLC0415
+    from .similarity import hash60  # noqa: PLC0415
 
-    sh = _shingles_or_whole(F.col(text_col))
+    sh = shingles_or_whole(text_col)
     toks = df.select(
         F.col(id_col),
         (F.transform(sh, hash60) if hash_keys else sh).alias("hs"),
     )
-    # _shingles_or_whole already yields one k-gram per starting position
+    # shingles_or_whole already yields one k-gram per starting position
     # for k=3 (SHINGLE_WORDS); positions are 1-based
     pos = toks.select(
         F.col(id_col), F.posexplode("hs").alias("p0", "h")

@@ -35,7 +35,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import bind_once, normalize_text, word_shingles, tokens
+from ..cache import leaf, loop_conf
+from ..functions.text import bind_once, memo_column, shingles_or_whole, tokens
 from ..functions.rounding import r6n, r6n_sql
 from ..sources.catalog import widen_for_compute
 
@@ -105,45 +106,14 @@ def hash60(c: Column) -> Column:
 _bind = bind_once
 
 
-def _shingles_or_whole(text_col) -> Column:
-    """3-word shingles; texts shorter than the shingle width fall back to
-    one whole-text shingle (mirrors doc_fingerprint)."""
-    sh = word_shingles(text_col)
-    return F.when(F.size(sh) > 0, sh).otherwise(F.array(normalize_text(text_col)))
-
-
-#: per-process memo of the BUILT Column expression trees for the two
-#: signature builders, keyed by (builder, input-column repr).  The
-#: builders are pure functions of module constants and the input column,
-#: but constructing them costs hundreds of py4j round-trips — measured
-#: 0.3-1.4s of pure driver time PER CALL (r11), paid by every LSH query.
-#: A Column is an immutable unresolved expression tree resolved per
-#: plan, so reuse across DataFrames AND across session restarts in one
-#: process is sound (verified: same values after spark.stop() + new
-#: session — the py4j gateway JVM owns the expression objects).
-_COL_MEMO: dict[tuple[str, str], Column] = {}
-
-
-def _memo_col(kind: str, text_col, build) -> Column:
-    key = (kind, str(text_col))
-    col = _COL_MEMO.get(key)
-    if col is None:
-        col = build()
-        _COL_MEMO[key] = col
-    return col
-
-
+@memo_column
 def minhash_signature(text_col) -> Column:
     """array<long> of MINHASH_K minimum permuted shingle hashes.
 
     Base hash per shingle is computed once; each permutation is a
     multiply-add mod P over the materialized base array.
     """
-    return _memo_col("minhash_signature", text_col, lambda: _minhash_signature_build(text_col))
-
-
-def _minhash_signature_build(text_col) -> Column:
-    base = F.transform(_shingles_or_whole(text_col), lambda s: hash60(s) % MERSENNE_P)
+    base = F.transform(shingles_or_whole(text_col), lambda s: hash60(s) % MERSENNE_P)
 
     def perm(a: int, b: int):
         # closure factory, not default args: PySpark derives the lambda-var
@@ -160,6 +130,7 @@ def _minhash_signature_build(text_col) -> Column:
     return _bind(base, all_perms)
 
 
+@memo_column
 def simhash32(text_col) -> Column:
     """32-bit SimHash over whitespace tokens (all occurrences, weight 1).
 
@@ -174,10 +145,6 @@ def simhash32(text_col) -> Column:
     power-of-two per strictly-positive counter (measured 2.4x, 0
     mismatches over every sf0.1 doc).
     """
-    return _memo_col("simhash32", text_col, lambda: _simhash32_build(text_col))
-
-
-def _simhash32_build(text_col) -> Column:
     hashes = F.transform(tokens(text_col), hash60)
     masks = F.array(*[F.lit(1 << j) for j in range(SIMHASH_BITS)])
     pows = F.array(*[F.lit(1 << j).cast("long") for j in range(SIMHASH_BITS)])
@@ -228,14 +195,14 @@ def minhash_signatures(
     §2.2).
     """
     df = widen_for_compute(df)
-    sigs = df.select(F.col(id_col), minhash_signature(F.col(text_col)).alias("sig"))
+    sigs = df.select(F.col(id_col), minhash_signature(text_col).alias("sig"))
     # r10: eager localCheckpoint, not lazy persist — persist dedupes
     # execution but re-inlines the shingle+hash subtree at every
     # consumer reference (band self-join sides, est-Jaccard joins, shard
     # keys, ...), so multi-consumer queries carried 5-9 copies of the
     # signature pipeline in their analyzed plans.  The leaf is the local
     # analog of the parquet signature stage the docstring describes.
-    return sigs.localCheckpoint(eager=True) if materialize else sigs
+    return leaf(sigs) if materialize else sigs
 
 
 def write_signatures_table(
@@ -258,8 +225,8 @@ def write_signatures_table(
     """
     widen_for_compute(df).select(
         F.col(id_col),
-        minhash_signature(F.col(text_col)).alias("sig"),
-        simhash32(F.col(text_col)).alias("sh"),
+        minhash_signature(text_col).alias("sig"),
+        simhash32(text_col).alias("sh"),
     ).write.mode(mode).parquet(path)
 
 
@@ -493,10 +460,8 @@ def components_from_pairs(
             }
         )
 
-    edges = pairs.mapInPandas(contract, "id_a long, id_b long").localCheckpoint(
-        eager=True
-    )
-    # EVERY round's labels are eager-checkpointed (r10; compress mode
+    edges = pairs.mapInPandas(contract, "id_a long, id_b long").transform(leaf)
+    # EVERY round's labels are checkpointed (r10; compress mode
     # always did this — see the pointer-doubling note below).  The old
     # non-compress protocol (lazy persist + periodic checkpoint every 5
     # rounds) let the analyzed tree double per round — each round
@@ -510,9 +475,7 @@ def components_from_pairs(
     # count now joins two in-memory leaves.  A leaf is also what every
     # multi-reference consumer (BCubed cells, golden-record rollups,
     # soft-dedup weights) needs returned.
-    labels = nodes.select("id", F.col("id").alias("label")).localCheckpoint(
-        eager=True
-    )
+    labels = nodes.select("id", F.col("id").alias("label")).transform(leaf)
     # Per-round action fusion (r11): the convergence count used to JOIN
     # the new and old label leaves per round — a whole extra shuffle
     # join + count job on top of the checkpoint job.  The join-back
@@ -522,8 +485,6 @@ def components_from_pairs(
     # one cheap aggregate over the just-materialized leaf — per round:
     # one checkpoint job + one leaf scan instead of checkpoint + shuffle
     # join + count.  Label values are untouched.
-    from ..cache import loop_conf
-
     with loop_conf(edges.sparkSession, edges, labels):
         labels = _components_loop(edges, labels, max_iters, compress)
     # edges is a localCheckpoint: its blocks are released by the
@@ -538,8 +499,8 @@ def _components_loop(
     """The min-label-propagation rounds of :func:`components_from_pairs`
     (split out so the caller can scope the loop's session-conf window).
     Runs with AQE off and a data-derived static shuffle-partition count;
-    each round is ONE job: the lazy localCheckpoints materialize inside
-    the convergence count's action.  ``edges`` is the locally contracted
+    each round is ONE job: the round's leaves materialize inside the
+    convergence count's action.  ``edges`` is the locally contracted
     graph, so the rounds grow with ITS diameter — the loop only merges
     stars across edge partitions — not with the input graph's."""
     for it in range(max_iters):
@@ -568,7 +529,7 @@ def _components_loop(
             # doubling step lowers a label iff llabel < label, which
             # ORs into the round's change flag (final != old  <=>
             # min-step changed OR doubling lowered the min-step result).
-            base = new_labels.localCheckpoint(eager=False)
+            base = leaf(new_labels)
             lab2 = base.select(
                 F.col("id").alias("lid"), F.col("label").alias("llabel")
             )
@@ -577,7 +538,7 @@ def _components_loop(
                 F.least("label", "llabel").alias("label"),
                 (F.col("chg") | (F.col("llabel") < F.col("label"))).alias("chg"),
             )
-        new_labels = new_labels.localCheckpoint(eager=False)
+        new_labels = leaf(new_labels)
         changed = new_labels.where(F.col("chg")).count()
         labels = new_labels
         if changed == 0:
@@ -662,7 +623,7 @@ def kcore_trajectory(
             )
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     )
     summaries = []
     for r in range(rounds + 1):
@@ -688,7 +649,7 @@ def kcore_trajectory(
                 F.col("id_b") == F.col("w"),
                 "left_semi",
             )
-            .localCheckpoint(eager=True)
+            .transform(leaf)
         )
     out = summaries[0]
     for s in summaries[1:]:
@@ -748,7 +709,7 @@ def ngram_jaccard_pairs(
     (the re-rank step after MinHash recall)."""
     sh = df.select(
         F.col(id_col),
-        F.array_distinct(_shingles_or_whole(F.col(text_col))).alias("sh"),
+        F.array_distinct(shingles_or_whole(text_col)).alias("sh"),
     ).persist()
     sigs = minhash_signatures(df, text_col, id_col, materialize=True)
     pairs = lsh_candidate_pairs(sigs, id_col)
@@ -798,7 +759,7 @@ def ngram_containment_pairs(
     sh = df.select(
         F.col(id_col),
         F.array_distinct(
-            F.transform(_shingles_or_whole(F.col(text_col)), hash60)
+            F.transform(shingles_or_whole(text_col), hash60)
         ).alias("hs"),
     ).persist()
     index = sh.select(F.col(id_col).alias("ix_id"), F.explode("hs").alias("h"))
@@ -887,7 +848,7 @@ def simhash_pairs(
     parquet and ran the HOF twice)."""
     sh = (
         widen_for_compute(df)
-        .select(F.col(id_col), simhash32(F.col(text_col)).alias("sh"))
+        .select(F.col(id_col), simhash32(text_col).alias("sh"))
         .persist()
     )
     return simhash_pairs_from_signatures(sh, id_col, max_hamming)
@@ -1642,7 +1603,7 @@ def mmr_topk(
     p = (
         pool_df.join(vecs, pool_df.neighbor_id == vecs.nid)
         .select("q_id", "neighbor_id", "cos", "rank", "vec")
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     )
     a = p.select(
         "q_id", F.col("neighbor_id").alias("id_a"), F.col("vec").alias("va")
@@ -1659,7 +1620,7 @@ def mmr_topk(
             "id_b",
             F.round(cosine(F.col("va"), F.col("vb")), 6).alias("sim"),
         )
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     )
     sel = p.where(F.col("rank") == 1).select(
         "q_id",
@@ -1703,7 +1664,7 @@ def mmr_topk(
                 F.lit(r).cast("int").alias("pick_rank"),
             )
         )
-        sel = sel.unionAll(pick).localCheckpoint(eager=True)
+        sel = sel.unionAll(pick).transform(leaf)
     return sel.select("q_id", "pick_rank", "neighbor_id", "relevance", "mmr")
 
 
@@ -1969,11 +1930,11 @@ def source_overlap_jaccard(
         df.select(
             F.col(source_col).alias("src"),
             F.explode(
-                F.array_distinct(_shingles_or_whole(F.col(text_col)))
+                F.array_distinct(shingles_or_whole(text_col))
             ).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     )
     sizes = sh.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -2280,7 +2241,7 @@ def lsh_eval_metrics(
     # the same doubles, so truth is bit-identical to the array form.
     sh = widen_for_compute(df).select(
         F.col(id_col).alias("id"),
-        F.array_distinct(_shingles_or_whole(F.col(text_col))).alias("shs"),
+        F.array_distinct(shingles_or_whole(text_col)).alias("shs"),
     ).persist()
     ix = sh.select("id", F.explode("shs").alias("s"))
     dfreq = ix.groupBy("s").agg(F.count(F.lit(1)).alias("df_s"))
@@ -2483,7 +2444,7 @@ def near_dup_pagerank(
             pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     ).persist()
     deg = edges.groupBy("id_a").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("id_a").alias("id"), "deg")
@@ -2738,25 +2699,23 @@ def pagerank_topn(
         .select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "deg"
         )
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     )
-    nodes = deg.select(F.col("id_a").alias("v")).localCheckpoint(eager=True)
+    nodes = deg.select(F.col("id_a").alias("v")).transform(leaf)
     ncnt = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
     base = F.expr(f"CAST({PAGERANK_SCALE} AS BIGINT) div n_nodes")
     pr = (
         nodes.crossJoin(F.broadcast(ncnt))
         .select("v", base.alias("pr"))
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     )
     # r11: rounds run under loop_conf (AQE off, leaf-derived static
-    # partitions) with LAZY checkpoints — the near-dup graph's edge and
-    # rank relations are tiny (LSH-pruned), so static planning of the
-    # per-round joins is safe (unlike the corpus-sized facility-location
-    # coverage join, where this conversion was measured 2x WORSE and
+    # partitions) — the near-dup graph's edge and rank relations are
+    # tiny (LSH-pruned), so static planning of the per-round joins is
+    # safe (unlike the corpus-sized facility-location coverage join,
+    # where this conversion was measured 2x WORSE and
     # reverted), and the 6 per-round eager checkpoint job storms
     # collapse into the final consumer's job chain.
-    from ..cache import loop_conf
-
     with loop_conf(ew.sparkSession, ew, nodes, pr):
         for _ in range(rounds):
             inflow = (
@@ -2775,7 +2734,7 @@ def pagerank_topn(
                         " AS BIGINT)"
                     ).alias("pr"),
                 )
-                .localCheckpoint(eager=False)
+                .transform(leaf)
             )
     top = pr.orderBy(F.col("pr").desc(), F.col("v").asc()).limit(n_top)
     from pyspark.sql import Window
@@ -2870,7 +2829,7 @@ def kcenter_coreset(
     global window); ``localCheckpoint`` per round keeps the plan O(1).
     The oracle's unrolled CTE chain certifies the whole trajectory."""
     pts = emb.select(F.col(id_col).alias("pid"), F.col(vec_col).alias("vec"))
-    seed = pts.orderBy(F.col("pid").asc()).limit(1).localCheckpoint(eager=True)
+    seed = pts.orderBy(F.col("pid").asc()).limit(1).transform(leaf)
     picks = [
         seed.select(
             F.lit(1).cast("int").alias("pick_rank"),
@@ -2889,13 +2848,13 @@ def kcenter_coreset(
                 "mind"
             ),
         )
-        .localCheckpoint(eager=True)
+        .transform(leaf)
     )
     for r in range(2, k + 1):
         pick = (
             state.orderBy(F.col("mind").desc(), F.col("pid").asc())
             .limit(1)
-            .localCheckpoint(eager=True)
+            .transform(leaf)
         )
         picks.append(
             pick.select(
@@ -2920,7 +2879,7 @@ def kcenter_coreset(
                     ),
                 ).alias("mind"),
             )
-            .localCheckpoint(eager=True)
+            .transform(leaf)
         )
     out = picks[0]
     for p in picks[1:]:
@@ -3005,7 +2964,7 @@ def winnow_pairs(
     fan out quadratically."""
     kg = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(_shingles_or_whole(F.col(text_col))).alias("pos", "gram"),
+        F.posexplode(shingles_or_whole(text_col)).alias("pos", "gram"),
     )
     h40 = F.shiftright(hash60(F.col("gram")), 20)
     key = F.shiftleft(h40, _WINNOW_POS_BITS) + (

@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import leaf
 from .functions import text as TX
 from .operators import decontaminate as DECON
 from .operators import dedup as DD
@@ -108,7 +109,7 @@ def curate_corpus(
             & F.col("lang").isin(list(c.languages))
         )
         .drop("__q")
-        .localCheckpoint(eager=True),
+        .transform(leaf),
     )
 
     # 2. exact dedup (content-hash groupBy, min-id keep).  Write FIRST,
@@ -151,9 +152,7 @@ def curate_corpus(
     kept = stage(
         "near_dup_dedup",
         funnel[-1][2],
-        kept.join(drop_near, c.id_col, "left_anti").localCheckpoint(
-            eager=True
-        ),
+        kept.join(drop_near, c.id_col, "left_anti").transform(leaf),
     )
 
     # signatures are deterministic per document, so every later stage
@@ -180,9 +179,7 @@ def curate_corpus(
         kept = stage(
             "decontamination",
             funnel[-1][2],
-            kept.join(contaminated, c.id_col, "left_anti").localCheckpoint(
-                eager=True
-            ),
+            kept.join(contaminated, c.id_col, "left_anti").transform(leaf),
         )
 
     # 5. leakage-safe split on the SURVIVING corpus (near-dup components

@@ -1,11 +1,11 @@
 """Round-10 optimization: the Arrow-batched exact kNN pair scorer.
 
-``_emb_pair_scorer`` replaces the JVM broadcast-nested-loop + interpreted
-HOF dot with NumPy block scoring whose arithmetic is bit-identical by
-construction (sequential per-dimension accumulation, no matmul
+``knn_np.emb_pair_scorer`` replaces the JVM broadcast-nested-loop +
+interpreted HOF dot with NumPy block scoring whose arithmetic is
+bit-identical by construction (sequential per-dimension accumulation, no matmul
 reassociation, no FMA).  These tests pin the two load-bearing claims:
 
-1. ``_np_round6_scaled`` is an exact replica of JVM ``round(double, 6)``
+1. ``knn_np.round6_scaled`` is an exact replica of JVM ``round(double, 6)``
    (``BigDecimal.valueOf(d).setScale(6, HALF_UP)``) — checked against a
    pure-Decimal reference on random values, exact .5 boundaries, and
    nextafter-perturbed boundary neighbors (the fast path's danger zone).
@@ -21,6 +21,7 @@ import numpy as np
 import pytest
 
 from datafusion_functions_extra_spark import suite
+from datafusion_functions_extra_spark.functions import knn_np
 from datafusion_functions_extra_spark.sources import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -42,7 +43,7 @@ def _ref_round6_scaled(x: float) -> int:
 def test_round6_scaled_random():
     rng = np.random.default_rng(7)
     x = rng.uniform(-1.0, 1.0, 20000)
-    got = suite._np_round6_scaled(x)
+    got = knn_np.round6_scaled(x)
     for i in range(0, len(x), 997):  # spot-check a stride plus full sum below
         assert got[i] == _ref_round6_scaled(float(x[i]))
     ref = np.array([_ref_round6_scaled(float(v)) for v in x])
@@ -59,7 +60,7 @@ def test_round6_scaled_boundaries():
             cases.extend([b, np.nextafter(b, 0.0), np.nextafter(b, s * 2.0)])
     cases.extend([0.0, 1.0, -1.0, 0.9999995, -0.9999995])
     x = np.array(cases)
-    got = suite._np_round6_scaled(x)
+    got = knn_np.round6_scaled(x)
     ref = np.array([_ref_round6_scaled(float(v)) for v in x])
     assert (got == ref).all()
 

@@ -13,6 +13,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from datafusion_functions_extra_spark.functions import text as TX
 from datafusion_functions_extra_spark.operators import similarity as SIM
 from datafusion_functions_extra_spark.sources import widen_for_compute
 
@@ -74,7 +75,7 @@ def test_lsh_eval_metrics_mixed_rare_and_stop_shingles(spark):
         r["doc_id"]: set(r["shs"])
         for r in df.select(
             "doc_id",
-            F.array_distinct(SIM._shingles_or_whole(F.col("text"))).alias("shs"),
+            F.array_distinct(TX.shingles_or_whole("text")).alias("shs"),
         ).collect()
     }
     a, b = sh["zd1"], sh["zd2"]
@@ -85,7 +86,7 @@ def test_lsh_eval_metrics_mixed_rare_and_stop_shingles(spark):
     # than the full intersection)
     hot_shingles = {
         s for s, in (
-            df.select(F.explode(SIM._shingles_or_whole(F.col("text"))).alias("s"))
+            df.select(F.explode(TX.shingles_or_whole("text")).alias("s"))
             .groupBy("s").count().where(F.col("count") > 4).select("s").collect()
         )
     }

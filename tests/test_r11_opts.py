@@ -21,6 +21,7 @@ def test_oph_inrow_matches_relational_form(spark):
     null-bin count in one projection) must be row-for-row identical to
     the r10 relational plan it replaced (shingle explode -> (id, bin)
     min aggregate -> doubled-grid forward-fill window -> collect)."""
+    from datafusion_functions_extra_spark.functions import text as TX
     from datafusion_functions_extra_spark.operators import similarity as SIM
     from datafusion_functions_extra_spark.sources import load_table
     from datafusion_functions_extra_spark.suite import _OPH_BINS as B
@@ -31,7 +32,7 @@ def test_oph_inrow_matches_relational_form(spark):
     # --- old relational form (verbatim r10 shape) ---
     hb = d.select(
         F.col("doc_id").alias("id"),
-        F.explode(SIM._shingles_or_whole(F.col("text"))).alias("s"),
+        F.explode(TX.shingles_or_whole("text")).alias("s"),
     ).select("id", (SIM.hash60(F.col("s")) % SIM.MERSENNE_P).alias("h"))
     binmin = (
         hb.select(
@@ -114,11 +115,11 @@ def test_oph_inrow_matches_relational_form(spark):
                 with_hs,
             )
 
-        sh = F.array_distinct(SIM._shingles_or_whole(text_col))
+        sh = F.array_distinct(TX.shingles_or_whole(text_col))
         return bind_once(sh, with_hashes)
 
     new = d.select(
-        F.col("doc_id").alias("id"), _oph_struct(F.col("text")).alias("f")
+        F.col("doc_id").alias("id"), _oph_struct("text").alias("f")
     ).select("id", "f.osig", "f.n_empty")
     new_rows = {
         r["id"]: (tuple(r["osig"]), r["n_empty"]) for r in new.collect()
@@ -219,6 +220,7 @@ def _worker_case(name):
         _AUDIO_DFT_WINDOW,
         _PGRAM_PERIODS,
         _QUIET_ABS,
+        _knn_top5_sym,
         _twiddle,
     )
     from tests.test_multimodal import _encode_png
@@ -279,6 +281,10 @@ def _worker_case(name):
             ),
             clips,
         ),
+        "emb_pair_scorer": (
+            lambda spark: _knn_top5_sym(spark, "/root/testdata/sf0.001"),
+            pd.DataFrame({"vec_id": [0, 1, 2]}),
+        ),
     }[name]
 
 
@@ -294,6 +300,7 @@ def _worker_case(name):
         "wav_stats",
         "silence_segments",
         "dft_twiddle_sums",
+        "emb_pair_scorer",
     ],
 )
 def test_worker_runs_without_the_package(spark, monkeypatch, tmp_path, case):

@@ -80,6 +80,7 @@ def test_lsh_eval_metrics_stop_shingle_cap(spark):
     # below the boilerplate df, the hot shingle contributes ZERO
     # ground-truth candidates (no quadratic blowup), while the rare-path
     # truth pair is still found: the df cap kills hot keys, not recall.
+    from datafusion_functions_extra_spark.functions import text as TX
     from datafusion_functions_extra_spark.operators import similarity as SIM
 
     boiler = [
@@ -97,7 +98,7 @@ def test_lsh_eval_metrics_stop_shingle_cap(spark):
     # could only inflate the candidate set, never n_truth)
     sh = df.select(
         "doc_id",
-        F.array_distinct(SIM._shingles_or_whole(F.col("text"))).alias("shs"),
+        F.array_distinct(TX.shingles_or_whole("text")).alias("shs"),
     )
     ix = sh.select("doc_id", F.explode("shs").alias("s"))
     capped = ix.groupBy("s").count().where(F.col("count") <= 4)

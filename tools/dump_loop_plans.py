@@ -4,7 +4,10 @@ claims about the per-round work were unauditable from plans/).
 
 Monkeypatches DataFrame.localCheckpoint to record the formatted plan of
 every DataFrame being checkpointed while a query builds/runs, then
-writes the recorded plans to plans/<out-dir>/<name>_rounds.txt.
+writes the recorded plans to plans/<out-dir>/<name>_rounds.txt.  Every
+leaf of the package goes through cache.leaf, which makes exactly one
+localCheckpoint call, so the count it writes is the query's leaf count
+(eager and lazy alike).
 
 Usage: python tools/dump_loop_plans.py --names a,b --out-dir plans/r11
        [--sf-dir DIR] [--max-plans 4]

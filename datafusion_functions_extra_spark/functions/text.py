@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..cache import leaf
 from .aggregates import ColumnOrName, _col
+from .distribution import global_rank
 from .rounding import r6n
 
 #: small english stopword list used by quality scoring
@@ -546,49 +547,22 @@ def build_vocab(
     id assignment every engine reproduces bit-identically (pure integer
     ordering, no floats).
 
-    Plan (r05, two-phase ranking — no single-partition window): explode
-    -> one hash aggregate, then ``repartitionByRange`` on the id order so
-    partition p holds a contiguous slice of the sort order; each
-    partition ranks LOCALLY in parallel (window partitioned by
-    ``spark_partition_id``), per-partition row counts (<= #partitions
-    rows) roll into broadcast cumulative offsets, and
-    ``token_id = offset(p) + local_rank``.  A web-scale vocabulary (1e9
-    distinct tokens) never lands on one partition; the only global
-    structure is the #partitions-row offset table.  Keys are unique per
-    token, so range-boundary placement cannot split a key and the ids
-    are exactly the global ``row_number`` by (count desc, token asc).
+    Plan: explode -> one hash aggregate, then
+    :func:`~.distribution.global_rank`'s two-phase ranking (range
+    repartition, parallel local ranks, broadcast per-partition offsets),
+    so a web-scale vocabulary never lands on one partition.  Keys are
+    unique per token, so the ids are exactly the global ``row_number``
+    by (count desc, token asc).
     """
-    from pyspark.sql import Window
-
     counts = (
         df.select(F.explode(tokens(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .where(F.col("n_occurrences") >= min_count)
     )
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     order = [F.col("n_occurrences").desc(), F.col("token").asc()]
-    # eager pin of the sampled range layout — see
-    # functions/distribution.py global_cumsum for the double-consumer
-    # boundary-mismatch failure mode this prevents
-    ranged = (
-        counts.repartitionByRange(n_part, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(leaf)
-    )
-    wl = Window.partitionBy("_pid").orderBy(*order)
-    local = ranged.withColumn("_lrn", F.row_number().over(wl))
-    wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        local.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn("_off", F.coalesce(F.sum("_n").over(wo), F.lit(0)))
-        .select("_pid", "_off")
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn("token_id", (F.col("_off") + F.col("_lrn")).cast("int"))
-        .select("token_id", "token", "n_occurrences")
+    return global_rank(counts, order, "token_id").select(
+        F.col("token_id").cast("int").alias("token_id"), "token", "n_occurrences"
     )
 
 

@@ -183,7 +183,7 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, sig array<long>) — the per-doc signature relation.
 
-    ``materialize=True`` persists the relation (MEMORY_AND_DISK): the LSH
+    ``materialize=True`` returns the relation as one ``cache.leaf``: the LSH
     pipeline reads it from both sides of the band self-join plus the
     est-Jaccard joins, and without pinning, each consumer re-hashes every
     shingle.  At 100 TB the equivalent is writing signatures to a parquet
@@ -930,6 +930,44 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
+def _score_candidates(q: DataFrame, c: DataFrame, on=None, *keep: str) -> DataFrame:
+    """(q_id, neighbor_id, *keep, cos): the broadcast query side
+    (q_id, q_vec, ...) joined as the LEFT input to the corpus side
+    (neighbor_id, c_vec, ...) on ``on`` (anything ``DataFrame.join``
+    takes), self-pairs dropped, scored by the 6-dp-rounded cosine.  At
+    100 TB the corpus streams through one pass past the broadcast
+    queries; no shuffle of the corpus itself."""
+    return (
+        F.broadcast(q)
+        .join(c, on)
+        .where(F.col("q_id") != F.col("neighbor_id"))
+        .select(
+            "q_id",
+            "neighbor_id",
+            *keep,
+            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"),
+        )
+    )
+
+
+def _rank_neighbors(
+    scored: DataFrame, k: int, by=("q_id",), score: str = "cos"
+) -> DataFrame:
+    """``scored`` plus an int ``rank``: the row_number by (``score`` desc,
+    neighbor_id asc) within ``by``, keeping rank <= k.  Ranking a
+    6-dp-rounded score (the cosine, or MMR's greedy score) with the id
+    tie-break is what makes every top-k reproducible across engines and
+    partitionings; the DuckDB oracles rank by the same rule."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*by).orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -942,32 +980,13 @@ def cosine_topk(
     The query side is a literal-ID filter broadcast against the corpus —
     at 100 TB the corpus side streams through one pass, no shuffle of the
     corpus itself; ranking shuffles only (q x corpus-partition) top rows.
-    Ranking uses the 6-dp-rounded cosine (then neighbor id) so order is
-    reproducible across engines and partitionings.
+    Ranking is :func:`_rank_neighbors`.
     """
-    from pyspark.sql import Window
-
     q = emb.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
     c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("q_id") != F.col("neighbor_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rank_neighbors(_score_candidates(q, c), k)
 
 
 def hard_negative_topk(
@@ -990,8 +1009,6 @@ def hard_negative_topk(
     typically removes ~1/n_classes of candidates for free during the
     scan.
     """
-    from pyspark.sql import Window
-
     q = emb.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
@@ -1002,34 +1019,8 @@ def hard_negative_topk(
         F.col(vec_col).alias("c_vec"),
         F.col(label_col).alias("neighbor_label"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(
-            c,
-            (F.col("q_id") != F.col("neighbor_id"))
-            & (F.col("q_label") != F.col("neighbor_label")),
-        )
-        .select(
-            "q_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "neighbor_id",
-            "neighbor_label",
-            "cos",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    on = F.col("q_label") != F.col("neighbor_label")
+    return _rank_neighbors(_score_candidates(q, c, on, "neighbor_label"), k)
 
 
 def hard_negative_topk_oracle_sql(query_ids: list[int], k: int = 3) -> str:
@@ -1170,8 +1161,6 @@ def ivf_cosine_topk(
     centroid cell; the cell join is an equi-join keyed on the cell id.
     Same output shape as the exact/LSH paths (q_id, neighbor_id, cos, rank).
     """
-    from pyspark.sql import Window
-
     assigned = ivf_assign(emb, id_col, vec_col, centroid_ids)
     q = assigned.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), "cell"
@@ -1179,24 +1168,7 @@ def ivf_cosine_topk(
     c = assigned.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "cell"
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .where(F.col("q_id") != F.col("neighbor_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rank_neighbors(_score_candidates(q, c, "cell"), k)
 
 
 def embedding_near_dup_pairs(
@@ -1282,41 +1254,10 @@ def ann_cosine_topk(
     Plan: project bucket per row (one corpus pass), equi-join query
     buckets to corpus buckets — shuffle keyed on the bucket id, never a
     cross join.  Recall < 1 by construction; the exact path is the oracle
-    for quality measurement.
+    for quality measurement.  This is :func:`ann_multiprobe_topk` with no
+    flipped bits.
     """
-    from pyspark.sql import Window
-
-    bucketed = emb.select(
-        F.col(id_col), F.col(vec_col), hyperplane_bucket(F.col(vec_col)).alias("bucket")
-    )
-    q = bucketed.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("bucket"),
-    )
-    c = bucketed.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("bucket"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .where(F.col("q_id") != F.col("neighbor_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos", F.col("rank").cast("int").alias("rank"))
-    )
+    return _probe_topk(emb, query_ids, k, id_col, vec_col, masks=())
 
 
 # ---------------------------------------------------------------------------
@@ -1596,8 +1537,6 @@ def mmr_topk(
     neighbor id, and each greedy round operates on the BOUNDED
     (queries x pool) relation — the corpus-sized work is exactly the
     one :func:`cosine_topk` pass that builds the pool."""
-    from pyspark.sql import Window
-
     pool_df = cosine_topk(emb, query_ids, k=pool, id_col=id_col, vec_col=vec_col)
     vecs = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("vec"))
     p = (
@@ -1650,19 +1589,14 @@ def mmr_topk(
                 "mmr", F.round(F.col("cos") - F.lit(lam) * F.col("msim"), 6)
             )
         )
-        w = Window.partitionBy("q_id").orderBy(
-            F.col("mmr").desc(), F.col("id_a").asc()
-        )
-        pick = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                "q_id",
-                F.col("id_a").alias("neighbor_id"),
-                F.col("cos").alias("relevance"),
-                "mmr",
-                F.lit(r).cast("int").alias("pick_rank"),
-            )
+        pick = _rank_neighbors(
+            scored.withColumnRenamed("id_a", "neighbor_id"), 1, score="mmr"
+        ).select(
+            "q_id",
+            "neighbor_id",
+            F.col("cos").alias("relevance"),
+            "mmr",
+            F.lit(r).cast("int").alias("pick_rank"),
         )
         sel = sel.unionAll(pick).transform(leaf)
     return sel.select("q_id", "pick_rank", "neighbor_id", "relevance", "mmr")
@@ -1810,49 +1744,34 @@ def ann_multiprobe_topk(
     in exactly one bucket, so probes are disjoint and no candidate dedup
     is needed.
     """
-    from pyspark.sql import Window
+    return _probe_topk(emb, query_ids, k, id_col, vec_col, masks=HAMMING1_MASKS)
 
+
+#: XOR masks of the N_HYPERPLANES buckets at Hamming distance 1
+HAMMING1_MASKS: tuple[int, ...] = tuple(1 << p for p in range(N_HYPERPLANES))
+
+
+def probe_buckets(bucket: Column, masks: tuple[int, ...]) -> Column:
+    """array(bucket, bucket ^ m for m in masks): the multi-probe bucket
+    list of one hyperplane bucket."""
+    return F.array(bucket, *[bucket.bitwiseXOR(F.lit(m)) for m in masks])
+
+
+def _probe_topk(emb, query_ids, k, id_col, vec_col, masks) -> DataFrame:
+    """Cosine top-k over the corpus vectors whose hyperplane bucket is
+    one of each query's probe buckets (``probe_buckets(bucket, masks)``)."""
     bucketed = emb.select(
         F.col(id_col), F.col(vec_col), hyperplane_bucket(F.col(vec_col)).alias("bucket")
     )
-    probes = F.array(
-        F.col("bucket"),
-        *[
-            F.col("bucket").bitwiseXOR(F.lit(1 << p))
-            for p in range(N_HYPERPLANES)
-        ],
-    )
-    q = (
-        bucketed.where(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(probes).alias("bucket"),
-        )
+    q = bucketed.where(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("q_id"),
+        F.col(vec_col).alias("q_vec"),
+        F.explode(probe_buckets(F.col("bucket"), masks)).alias("bucket"),
     )
     c = bucketed.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("bucket"),
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "bucket"
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .where(F.col("q_id") != F.col("neighbor_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cos", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rank_neighbors(_score_candidates(q, c, "bucket"), k)
 
 
 def ann_cosine_topk_oracle_sql(query_ids: list[int], k: int = 5) -> str:
@@ -2427,8 +2346,8 @@ def near_dup_pagerank(
     identical path, so the whole iteration is oracle-hashable.
 
     Scale shape: each round is ONE edge-keyed join + ONE aggregate
-    (the standard distributed PR step); the edge relation is computed
-    once and persisted; iterations are a
+    (the standard distributed PR step); the edge relation is one
+    ``cache.leaf``, computed once; iterations are a
     FIXED small unroll (3), so the logical plan grows linearly and needs
     no checkpoint truncation (the label-propagation loop's localCheckpoint
     handles the unbounded-iteration case).
@@ -2445,7 +2364,7 @@ def near_dup_pagerank(
         )
         .distinct()
         .transform(leaf)
-    ).persist()
+    )
     deg = edges.groupBy("id_a").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("id_a").alias("id"), "deg")
     n = nodes.agg(F.count(F.lit(1)).alias("n"))

@@ -83,7 +83,6 @@ def ingest_dedup_batch(
     sigs_b.join(drop, id_col, "left_anti").select(id_col, "sig").write.mode(
         "append"
     ).parquet(stage_path)
-    sigs_b.unpersist()
     batch_df.unpersist()
 
 

@@ -89,3 +89,18 @@ def test_no_local_checkpoint_outside_cache():
             found[str(p.relative_to(pkg))] = lines
     assert found == {}
     assert _local_checkpoint_calls(pkg / "cache.py")
+
+
+@pytest.mark.parametrize(
+    "name", ["spatial_dbscan", "near_dup_pagerank", "text_textrank_keywords"]
+)
+def test_leaf_consumers_leave_no_cached_relation(spark, name):
+    """A leaf already holds its blocks; a ``persist`` on top of it stores
+    the relation a second time and registers it with the CacheManager,
+    where it outlives the query."""
+    from datafusion_functions_extra_spark.suite import QUERIES
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    QUERIES[name](spark, "/root/testdata/sf0.001").collect()
+    assert cache_manager.isEmpty()

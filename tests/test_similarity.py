@@ -126,6 +126,23 @@ def test_cosine_topk_ranks(spark):
     assert [r.rank for r in rows] == [1, 2]
 
 
+def test_rank_neighbors_tie_break_type_and_cut(spark):
+    from pyspark.sql.types import IntegerType
+
+    scored = spark.createDataFrame(
+        [(1, 5, 0.5), (1, 3, 0.5), (1, 4, 0.9), (1, 2, 0.1),
+         (2, 7, 0.5), (2, 6, 0.5), (2, 8, 0.2)],
+        "q_id bigint, neighbor_id bigint, cos double",
+    )
+    ranked = SIM._rank_neighbors(scored, 2)
+    assert ranked.schema["rank"].dataType == IntegerType()
+    # equal rounded cosines rank the smaller neighbor_id first; k cuts
+    # each query, not the relation
+    assert sorted((r.q_id, r.rank, r.neighbor_id) for r in ranked.collect()) == [
+        (1, 1, 4), (1, 2, 3), (2, 1, 6), (2, 2, 7),
+    ]
+
+
 def test_ann_bucket_self_consistency(spark):
     # a vector shares a bucket with itself; ANN on a corpus of identical
     # vectors returns all others as candidates at cos ~= 1

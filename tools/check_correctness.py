@@ -167,7 +167,10 @@ def main() -> int:
             failures += 1
             continue
         finally:
-            # per-query persist() lifetimes end here (see bench.py note)
+            # per-query persist() lifetimes end here (see bench.py note);
+            # name every query that left a relation in the CacheManager
+            if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+                print(f"cache {name}: persisted relations left in the CacheManager")
             spark.catalog.clearCache()
         if name not in oracles:
             print(f"weak  {name}: rows={len(spark_pd)} (no oracle, rows-only check)")
